@@ -661,31 +661,28 @@ def _one_span_docs(d):
 
 
 def kg_mentions_greedy_sql(spark, sf_dir):
-    """V1 mention detection with a REAL oracle (round 4): the pure-Catalyst
-    greedy longest-match scan (extract_mentions_sql — broadcast uni/bigram
-    joins + cursor fold) over the gazetteer's uni/bigram subset (round 5:
-    the full gazetteer carries 3-5-token phrases — see kg_mentions_kgram for
-    the any-k entry; THIS entry pins the k<=2 regime where the island-parity
-    closed form exists), on flat docs treated as one text span each.
-    DuckDB replays the same greedy automaton in closed form via
-    island-parity windows: a bigram candidate is selected iff its
+    """V1 mention detection with a REAL oracle (round 4): the shipped
+    greedy longest-match scan (extract_mentions, which picks its Catalyst
+    formulation from the gazetteer size) over the gazetteer's uni/bigram
+    subset (round 5: the full gazetteer carries 3-5-token phrases — see
+    kg_mentions_kgram for the any-k entry; THIS entry pins the k<=2 regime
+    where the island-parity closed form exists), on flat docs treated as
+    one text span each. DuckDB replays the same greedy automaton in closed
+    form via island-parity windows: a bigram candidate is selected iff its
     row_number within a run of consecutive bigram-candidate positions is
     odd, and a unigram fires iff no bigram candidate sits at its position
-    and the previous position's bigram wasn't selected. The same window
-    formulation also exists Spark-side (extract_mentions_sql_windows,
-    pinned bit-equal to the fold in pytest plus an adversarial island
-    fixture), so the parity closed form is cross-checked on BOTH engines
-    against the literal automaton. Aggregated per mention (count + sum of
-    positions) so the compare stays compact while remaining fully sensitive
-    to WHICH positions greedy selection picked."""
+    and the previous position's bigram wasn't selected — an independent
+    formulation checked against the Spark automaton. Aggregated per
+    mention (count + sum of positions) so the compare stays compact while
+    remaining fully sensitive to WHICH positions greedy selection picked."""
     from kbgen_spark import fixtures as FX
-    from kbgen_spark.operators.extract import extract_mentions_sql
+    from kbgen_spark.operators.extract import extract_mentions
 
     d = _t(spark, sf_dir, "documents")
     gaz2 = FX.build_gazetteer(d).filter(
         F.size(F.split("surface_form", " ")) <= 2
     )
-    out = extract_mentions_sql(_one_span_docs(d), gaz2)
+    out = extract_mentions(_one_span_docs(d), gaz2)
     return (
         out.groupBy("mention")
         .agg(
@@ -702,8 +699,8 @@ def kg_mentions_literal(spark, sf_dir):
     zero joins / zero shuffles (plan-asserted in pytest). Same aggregation
     and the same recursive-decomposition DuckDB oracle as
     kg_mentions_kgram, so the two entries pin that the literal plan and
-    the broadcast-join fold agree with the independent cross-engine replay
-    on identical input."""
+    the broadcast-join sparse decomposition agree with the independent
+    cross-engine replay on identical input."""
     from kbgen_spark import fixtures as FX
     from kbgen_spark.operators.extract import extract_mentions_sql_literal
 
@@ -719,20 +716,23 @@ def kg_mentions_literal(spark, sf_dir):
 def kg_mentions_kgram(spark, sf_dir):
     """Round-5 V1 generalization oracle: greedy longest-match over the FULL
     gazetteer — unigrams, 2-5-token phrases (FIXTURES N_NGRAM_PHRASES) and
-    plural variants — via the anchored k-token candidate joins + cursor fold
-    (extract_mentions_sql, k derived from the gazetteer). DuckDB mirrors the
-    n-gram gazetteer derivation, generates candidates by position × length,
-    and replays the SAME greedy automaton with a list_reduce fold over
-    (pos asc, len desc)-ordered candidates; the pure-python reference
+    plural variants — via the anchored k-token candidate joins + sparse
+    greedy decomposition (extract_mentions_sql_sparse, k derived from the
+    gazetteer: the formulation extract_mentions takes above the literal
+    cap, forced here so it stays under the oracle at fixture size). DuckDB
+    mirrors the n-gram gazetteer derivation, generates candidates by
+    position × length, and replays the SAME greedy automaton with a
+    list_reduce fold over (pos asc, len desc)-ordered candidates; the
+    pure-python reference
     (detect_mentions_py) pins the automaton itself in pytest, so the
     cross-engine agreement checks candidate generation + fold semantics on
     genuinely multi-length input. Aggregated per mention (count, sum and min
     of positions) — compact but fully sensitive to greedy selection."""
     from kbgen_spark import fixtures as FX
-    from kbgen_spark.operators.extract import extract_mentions_sql
+    from kbgen_spark.operators.extract import extract_mentions_sql_sparse
 
     d = _t(spark, sf_dir, "documents")
-    out = extract_mentions_sql(_one_span_docs(d), FX.build_gazetteer(d))
+    out = extract_mentions_sql_sparse(_one_span_docs(d), FX.build_gazetteer(d))
     return out.groupBy("mention").agg(
         F.count("*").alias("n"),
         F.sum("tok_start").alias("sum_pos"),
@@ -944,8 +944,8 @@ def pipeline_triples(spark, sf_dir):
 def pipeline_mentions_udf(spark, sf_dir):
     """The Iterator-pandas-UDF trie path, exercised explicitly (the pipeline
     default is the pure-Catalyst path since round 4 — see
-    kg_mentions_greedy_sql for its DuckDB-oracled twin; equality of the two
-    paths is pinned in tests/test_pipeline.py)."""
+    kg_mentions_literal / kg_mentions_kgram for its DuckDB-oracled twins;
+    equality of the paths is pinned in tests/test_pipeline.py)."""
     from kbgen_spark import fixtures as FX
     from kbgen_spark.operators.extract import extract_mentions
 
@@ -1008,7 +1008,7 @@ def pipeline_triples_mirror(spark, sf_dir):
     gap/order patterns, distinct). Output: distinct (subj, pred, obj)."""
     from kbgen_spark import fixtures as FX
     from kbgen_spark.fixtures_openvocab import mirrorable_shingle_hash
-    from kbgen_spark.operators.extract import extract_mentions_sql
+    from kbgen_spark.operators.extract import extract_mentions
     from kbgen_spark.operators.link import link_mentions
     from kbgen_spark.operators.materialize import apply_canon_map, assemble_triples
     from kbgen_spark.pipeline import build_canon_map
@@ -1016,7 +1016,7 @@ def pipeline_triples_mirror(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     gaz = FX.build_gazetteer(d)
     patterns = FX.build_relation_patterns(spark)
-    mentions = extract_mentions_sql(_one_span_docs(d), gaz)
+    mentions = extract_mentions(_one_span_docs(d), gaz)
     canon = build_canon_map(gaz, shingle_hash=mirrorable_shingle_hash)
     links = link_mentions(mentions, gaz, pre_normalized=True)
     return assemble_triples(apply_canon_map(links, canon), patterns)

@@ -44,10 +44,14 @@ def main() -> None:
 
     t0 = time.time()
     run = run_pipeline(spark, args.input, store=store, docs=docs)
-    n = run.triples.count()
-    elapsed = time.time() - t0
     if args.output:
+        # the write is the only action: a count() first would execute the
+        # lazy stages twice. The observe() counters ride on the write.
         write_triples(run.triples, args.output)
+        n = run.metrics()["n_triples"]
+    else:
+        n = run.triples.count()
+    elapsed = time.time() - t0
     print(
         json.dumps(
             {

@@ -189,7 +189,7 @@ def build_gazetteer(flat_docs: DataFrame) -> DataFrame:
     each evaluation re-scanned and re-exploded the corpus up to four times
     (measured: the derivation was 3.27 s of kg_cooccur_pairs' 3.67 s at
     sf0.1/local[32]; the linear plan takes one scan —
-    tools/bench_cooccur_iso.py, plans/r06/kg_cooccur_pairs_*.txt).
+    plans/r06/kg_cooccur_pairs_*.txt).
 
     Gram counting is WINDOW-PREFIX shaped (guide §2.3 "shuffle fewer
     bytes"): instead of exploding one string per (position, length) —

@@ -2,27 +2,28 @@
 
 The reference has no extraction stage (kbgen consumes RDF directly); the
 north_star mandates vectorized (never per-row) Python where Python is needed
-at all (BASELINE.json:6,15).  Three formulations, bit-identical on exact
-matching (pinned by tests):
+at all (BASELINE.json:6,15).  Two Catalyst formulations and one Python
+seam, bit-identical on exact matching (each pinned by tests against the
+pure-python reference ``detect_mentions_py``):
 
-- **fold (pure Catalyst, default)** — broadcast-join token n-grams against
-  the gazetteer (anchored: multi-token phrases are only assembled where the
-  position's token is the first token of some multi-token surface), then a
-  greedy-cursor ``F.aggregate`` fold per span (extract_mentions_sql). Exact
-  dictionary matching needs no Python at all. Surfaces of ANY token count
-  are matched — k = max tokens per surface is derived from the gazetteer by
-  one dictionary-sized aggregation (round 5; rounds 2–4 silently capped at
-  2 tokens, the round-4 verdict's #1 gap).
-- **windows (pure Catalyst, k ≤ 2 closed form)** — the island-parity WINDOW
-  replay of the same automaton (extract_mentions_sql_windows). Only valid
-  for uni/bigram gazetteers (raises otherwise); measured faster than the
-  fold on large corpora (BENCH/BASELINE.md round-4 A/B), so the auto
-  variant promotes it above EXTRACT_WINDOWS_MIN_DOCS.
+- **literal (pure Catalyst)** — for gazetteers with at most
+  EXTRACT_LITERAL_MAX_SURFACES distinct surfaces, the whole gazetteer rides
+  into the plan as InSet literals and the greedy cursor fold runs
+  array-side per span: one narrow projection, no join, no shuffle
+  (extract_mentions_sql_literal).
+- **sparse (pure Catalyst)** — above that cap: anchored broadcast candidate
+  joins (candidate_mentions), the greedy fold over the sparse multi-token
+  candidates only, and a coverage anti-join for the dense unigram matches
+  (extract_mentions_sql_sparse). Surfaces of ANY token count are matched —
+  k = max tokens per surface is derived from the gazetteer.
 - **fuzzy seam: Iterator[pd.Series] pandas UDF** — the gazetteer trie (a
   dict keyed by first token) is built once per Python worker per
   batch-iterator, amortized across all Arrow batches. Kept behind
   ``use_udf=True`` for matching semantics Catalyst can't express (edit-
   distance tries, context models).
+
+The literal/sparse choice is made in ONE place (_resolve_extract), from the
+distinct-surface count; extract_mentions and make_extract_fn both call it.
 
 Semantics (mirrored by tests/golden_gen.py and the kg_mentions_* DuckDB
 oracles): greedy longest-match scan over whitespace tokens; phrases up to
@@ -34,7 +35,6 @@ Output: ``mentions(doc_id, span_idx, offset, tok_start, mention)``.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -44,20 +44,6 @@ from pyspark.sql.functions import pandas_udf
 
 MENTION_ARRAY_T = "array<struct<mention:string,tok_start:int>>"
 MENTIONS_ACC_T = MENTION_ARRAY_T
-
-# auto-variant promotion thresholds (extract_mentions): the window replay is
-# measured faster than the fold on LARGE corpora (its win is the fold's
-# per-span candidate-array allocation tax, which grows with corpus size —
-# BENCH/BASELINE.md round-4/5 campaigns), while the fold wins warm-up-bound
-# small runs. Callers that know the corpus cardinality pass n_docs
-# (run_pipeline does — same cheap-cardinality-gate pattern as the canon/CC
-# local thresholds); otherwise Catalyst's scan-stats estimate decides, which
-# is accurate for file-scan-rooted plans (the production case: a parquet /
-# Iceberg corpus) and conservatively small for localCheckpoint/replicate
-# plans (falls back to the fold — never wrong, only unpromoted).
-EXTRACT_WINDOWS_MIN_DOCS = 2_000_000
-EXTRACT_WINDOWS_MIN_BYTES = 512 << 20
-
 
 def detect_mentions_py(
     text: str, surface_forms: set[str], by_first: dict, max_phrase: int | None = None
@@ -165,7 +151,7 @@ def max_surface_tokens(gazetteer: DataFrame) -> int:
 
 
 def _split_gazetteer(gazetteer: DataFrame):
-    """Gazetteer split for candidate generation (shared by ALL formulations):
+    """Gazetteer split for candidate generation (candidate_mentions):
 
     - g1     (_sf1)        : single-token surfaces;
     - gm     (_sfm, _len)  : multi-token surfaces with their token count;
@@ -228,6 +214,7 @@ def _token_stream(docs: DataFrame, k: int) -> DataFrame:
 # dictionary-size-gated driver-collect family as the local canon path.
 # Conservative cap: a create_map literal this size stays well inside codegen
 # method limits; larger gazetteers take the nxt-carry broadcast-join path.
+# Read at call time, so a test can set it to 0 to force the join path.
 ANCHOR_LITERAL_MAX = 512
 
 _CAND_STRUCT_T = "array<struct<pos:int,nl:int,mention:string>>"
@@ -237,18 +224,16 @@ def candidate_mentions(
     docs: DataFrame,
     gazetteer: DataFrame,
     k: int | None = None,
-    anchor_literal_max: int = ANCHOR_LITERAL_MAX,
 ) -> DataFrame:
     """Every position where a gazetteer surface matches:
     ``(doc_id, span_idx, offset, pos, nl, mention)`` with nl = −token_count
-    (``sort_array`` then puts longer candidates first at equal pos). The ONE
-    candidate-generation implementation behind the fold AND the window
-    formulations — no drift between them by construction.
+    (``sort_array`` then puts longer candidates first at equal pos). The
+    candidate generation behind the sparse formulation.
 
     Scale shape: the corpus-sized token stream stays in its scan partitions;
     phrase strings are assembled only at ANCHOR positions (first tokens of
     multi-token surfaces), bounded per anchor by that token's max surface
-    length. Two anchor mechanisms, measured round 5 (tools/bench_cand_ab.py,
+    length. Two anchor mechanisms, measured round 5 (BENCH/BASELINE.md,
     @8 pinned ×64, min-of-3): with few distinct anchor first-tokens the
     anchor→fmax map inlines as a PLAN LITERAL and phrases build array-side
     (no join, no per-token state; 24.0 s); above the cap each token row
@@ -258,9 +243,9 @@ def candidate_mentions(
     g1, gm, gfirst = _split_gazetteer(gazetteer)
     if k is None:
         k = max_surface_tokens(gazetteer)
-    if k >= 2 and anchor_literal_max:
-        arows = gfirst.limit(anchor_literal_max + 1).collect()
-        if len(arows) <= anchor_literal_max:
+    if k >= 2 and ANCHOR_LITERAL_MAX:
+        arows = gfirst.limit(ANCHOR_LITERAL_MAX + 1).collect()
+        if len(arows) <= ANCHOR_LITERAL_MAX:
             return _candidate_mentions_literal(docs, g1, gm, arows)
     tok = _token_stream(docs, k)
     uni = tok.join(F.broadcast(g1), tok["tok"] == F.col("_sf1")).select(
@@ -395,8 +380,8 @@ def _greedy_fold_expr(cands_col):
     the LITERAL reference automaton (detect_mentions_py), inside codegen. A
     candidate is emitted iff pos ≥ cursor, moving the cursor to pos + len (a
     consumed position skips ALL its candidates; an emitted match consumes
-    exactly its own tokens). Shared by the shuffle-regrouped fold and the
-    fully array-side literal extract."""
+    exactly its own tokens). Shared by the sparse formulation's regrouped
+    fold (_greedy_fold_select) and the fully array-side literal extract."""
     return F.aggregate(
         cands_col,
         F.expr(f"named_struct('cur', 0, 'acc', cast(array() as {MENTIONS_ACC_T}))"),
@@ -462,10 +447,10 @@ def extract_mentions_sql_literal(
     profile) scales perfectly.
 
     Same size-adaptive family as the driver-local canon path: the literal
-    set is capped (EXTRACT_LITERAL_MAX_SURFACES); extract_mentions' auto
-    variant gates on one dictionary-sized truncating collect and falls back
-    to the broadcast-join formulations above the cap. Bit-equal to fold /
-    sparse / UDF (test-pinned)."""
+    set is capped (EXTRACT_LITERAL_MAX_SURFACES) whether the caller passes
+    ``surfaces`` or the gazetteer is collected here; above the cap
+    _resolve_extract picks the sparse broadcast-join formulation. Bit-equal
+    to sparse / UDF (test-pinned)."""
     if surfaces is None:
         rows = (
             gazetteer.select("surface_form")
@@ -473,13 +458,12 @@ def extract_mentions_sql_literal(
             .limit(EXTRACT_LITERAL_MAX_SURFACES + 1)
             .collect()
         )
-        if len(rows) > EXTRACT_LITERAL_MAX_SURFACES:
-            raise ValueError(
-                "extract_mentions_sql_literal: gazetteer exceeds "
-                f"{EXTRACT_LITERAL_MAX_SURFACES} distinct surfaces — use the "
-                "broadcast-join paths (extract_mentions_sql[_sparse])"
-            )
         surfaces = [r[0] for r in rows]
+    if len(surfaces) > EXTRACT_LITERAL_MAX_SURFACES:
+        raise ValueError(
+            "extract_mentions_sql_literal: gazetteer surfaces exceed "
+            f"{EXTRACT_LITERAL_MAX_SURFACES} — use extract_mentions_sql_sparse"
+        )
     if not surfaces:
         ts0 = explode_text_spans(docs)
         return ts0.select(
@@ -508,7 +492,7 @@ def extract_mentions_sql_literal(
     # last — already the (pos asc, nl asc) order the fold consumes, so no
     # sort is ever needed; gram strings are built only when the position's
     # token anchors some L-token surface AND L tokens remain. Literals are
-    # backslash-escaped; bit-equality to the fold/UDF paths is test-pinned
+    # backslash-escaped; bit-equality to the sparse/UDF paths is test-pinned
     # and the kg_mentions_literal oracle replays the output cross-engine.
     def _sq(s: str) -> str:
         return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
@@ -550,35 +534,13 @@ def extract_mentions_sql_literal(
     )
 
 
-def extract_mentions_sql(
-    docs: DataFrame, gazetteer: DataFrame, k: int | None = None
-) -> DataFrame:
-    """Pure-Catalyst exact mention detection — bit-identical semantics to
-    the pandas-UDF scan, the sparse decomposition, and (for k ≤ 2
-    gazetteers) the window formulation; zero Python in the plan.
-
-    1. anchored broadcast candidate joins (candidate_mentions) → the
-       CANDIDATE set (matched positions only — ≪ corpus, the only thing
-       that ever shuffles);
-    2. greedy cursor fold per span (_greedy_fold_select).
-
-    Handles surfaces of ANY token count (k derived from the gazetteer when
-    not passed). This is the direct fold: EVERY candidate — including the
-    dense unigram matches — rides through collect_list arrays, which is the
-    formulation's allocation tax; extract_mentions_sql_sparse folds only
-    the sparse multi-token candidates. The UDF path
-    (extract_mentions(use_udf=True)) remains as the seam for FUZZY matching,
-    where per-candidate Python scoring is genuinely needed."""
-    return _greedy_fold_select(candidate_mentions(docs, gazetteer, k))
-
-
 def extract_mentions_sql_sparse(
     docs: DataFrame, gazetteer: DataFrame, k: int | None = None
 ) -> DataFrame:
-    """Sparse decomposition of the greedy scan — bit-equal to the direct
-    fold for ANY k (test-pinned; same decomposition the kg_mentions_kgram
-    DuckDB oracle replays), with the fold applied ONLY to multi-token
-    candidates:
+    """Sparse decomposition of the greedy scan — bit-equal to the literal
+    plan and detect_mentions_py for ANY k (test-pinned; same decomposition
+    the kg_mentions_kgram DuckDB oracle replays), with the fold applied
+    ONLY to multi-token candidates:
 
     1. a unigram match advances the cursor by exactly one position — it can
        never block a later candidate — so the cursor state at any
@@ -591,10 +553,10 @@ def extract_mentions_sql_sparse(
        ([tok_start, tok_start+len) exploded → equi anti-join, never a range
        join).
 
-    Why it wins at corpus scale: dictionary unigrams are DENSE (in the
-    fixture corpus nearly every token matches), so the direct fold's
-    collect_list materializes a per-span array of almost every token, while
-    multi-token candidates are SPARSE (phrase anchors only) — the fold
+    Why not fold every candidate: dictionary unigrams are DENSE (in the
+    fixture corpus nearly every token matches), so a fold over all
+    candidates materializes a per-span collect_list of almost every token,
+    while multi-token candidates are SPARSE (phrase anchors only) — the fold
     arrays shrink by the uni:multi candidate ratio and the dense unigram
     stream goes through flat hash joins instead."""
     if k is None:
@@ -639,126 +601,52 @@ def extract_mentions_sql_sparse(
     return fired.unionByName(uni_fired)
 
 
-def extract_mentions_sql_windows(
-    docs: DataFrame, gazetteer: DataFrame, k: int | None = None
-) -> DataFrame:
-    """Island-parity WINDOW formulation of the greedy scan — bit-identical to
-    the fold and the pandas-UDF scan for uni/bigram gazetteers (three-way pin
-    in tests), zero Python in the plan and NO per-span candidate-array
-    materialization (the fold's allocation tax — why this form wins on large
-    corpora, BENCH/BASELINE.md).
+def _resolve_extract(gazetteer: DataFrame, surfaces: list | None = None):
+    """The one literal-vs-sparse decision, resolved from the distinct-surface
+    count; returns ``docs -> mentions``.
 
-    Replays the greedy longest-match automaton in CLOSED FORM with window
-    functions over the bigram candidates (the same island-parity formulation
-    the kg_mentions_greedy_sql DuckDB oracle uses):
-
-    - only a FIRED bigram consumes a position beyond itself (a unigram
-      advances the cursor by exactly one), so a bigram candidate at pos p is
-      blocked iff the bigram at p-1 fired; within a maximal run of
-      consecutive bigram-candidate positions ("island") selection is
-      therefore odd-parity, and an island's first position always fires
-      (p-1 has no bigram candidate, and nothing else consumes ahead);
-    - a unigram fires iff its position has NO bigram candidate (a fired one
-      wins by longest-match; a blocked one means the position is consumed)
-      and the previous position's bigram wasn't selected.
-    Islands = pos − row_number() over (span, pos); selection = odd
-    row_number within the island; unigrams = two equi-keyed anti-joins
-    (hash/SMJ, never a nested loop).
-
-    The parity argument is exactly the k ≤ 2 special case of the automaton —
-    a gazetteer with longer surfaces has no closed form here, so this
-    RAISES for k > 2 (the fold handles any k). extract_mentions' auto
-    variant checks k before promoting."""
-    from pyspark.sql import Window
-
-    if k is None:
-        k = max_surface_tokens(gazetteer)
-    if k > 2:
-        raise ValueError(
-            f"extract_mentions_sql_windows: gazetteer has surfaces up to {k} "
-            "tokens — the island-parity replay is the k<=2 closed form of the "
-            "greedy automaton; use extract_mentions_sql (any k)"
+    With ``surfaces`` (the distinct surface list) supplied, no Spark job
+    runs. Otherwise one truncating dictionary-sized collect decides, plus
+    ``max_surface_tokens`` only when the gazetteer is over the literal cap.
+    The returned function builds its plan with no further eager work."""
+    if surfaces is None:
+        rows = (
+            gazetteer.select("surface_form")
+            .distinct()
+            .limit(EXTRACT_LITERAL_MAX_SURFACES + 1)
+            .collect()
         )
-    cands = candidate_mentions(docs, gazetteer, k=k)
-    m2 = cands.filter(F.col("nl") == -2).select(
-        "doc_id", "span_idx", "offset", "pos", "mention"
-    )
-    w_span = Window.partitionBy("doc_id", "span_idx", "offset").orderBy("pos")
-    isl = m2.withColumn("grp", F.col("pos") - F.row_number().over(w_span))
-    w_grp = Window.partitionBy("doc_id", "span_idx", "offset", "grp").orderBy("pos")
-    m2sel = (
-        isl.withColumn("rn", F.row_number().over(w_grp))
-        .filter(F.col("rn") % 2 == 1)
-        .select("doc_id", "span_idx", "offset", "pos", "mention")
-    )
-    m1 = (
-        cands.filter(F.col("nl") == -1)
-        .select("doc_id", "span_idx", "offset", "pos", "mention")
-        .join(
-            m2.select("doc_id", "span_idx", "offset", "pos"),
-            ["doc_id", "span_idx", "offset", "pos"],
-            "left_anti",
-        )
-        .join(
-            m2sel.select(
-                "doc_id", "span_idx", "offset", (F.col("pos") + 1).alias("pos")
-            ),
-            ["doc_id", "span_idx", "offset", "pos"],
-            "left_anti",
-        )
-    )
-    return m2sel.unionByName(m1).select(
-        "doc_id", "span_idx", "offset", "mention", F.col("pos").alias("tok_start")
-    )
-
-
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's optimized-plan sizeInBytes estimate — accurate for
-    file-scan-rooted plans (parquet/Iceberg corpus: the production case);
-    a non-scaling pass-through for localCheckpoint/replicate plans, which is
-    why callers that KNOW the corpus cardinality pass n_docs instead."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return None
+        if len(rows) > EXTRACT_LITERAL_MAX_SURFACES:
+            k = max_surface_tokens(gazetteer)
+            return lambda docs: extract_mentions_sql_sparse(docs, gazetteer, k=k)
+        surfaces = [r[0] for r in rows]
+    if len(surfaces) <= EXTRACT_LITERAL_MAX_SURFACES:
+        return lambda docs: extract_mentions_sql_literal(docs, gazetteer, surfaces)
+    k = max(s.count(" ") + 1 for s in surfaces)
+    return lambda docs: extract_mentions_sql_sparse(docs, gazetteer, k=k)
 
 
 def extract_mentions(
     docs: DataFrame,
     gazetteer: DataFrame,
     use_udf: bool = False,
-    variant: str | None = None,
-    n_docs: int | None = None,
     surfaces: list | None = None,
 ) -> DataFrame:
     """docs × gazetteer → mentions(doc_id, span_idx, offset, mention,
     tok_start).
 
-    ``variant`` (default ``auto``; ``$SPARK_GRAFT_EXTRACT`` overrides for
-    A/B campaigns):
+    The Catalyst formulation follows the gazetteer's distinct-surface count
+    (_resolve_extract): the whole-gazetteer-literal plan (zero join/shuffle)
+    at ≤ EXTRACT_LITERAL_MAX_SURFACES, the sparse greedy decomposition
+    above. Both are bit-equal, so the choice is a plan decision, never a
+    semantics one. Callers in per-batch loops hoist the decision with
+    ``make_extract_fn``.
 
-    - ``auto``    — size-adaptive, in priority order: (1) the
-      whole-gazetteer-literal plan (zero join/shuffle) when the gazetteer
-      has ≤ EXTRACT_LITERAL_MAX_SURFACES distinct surfaces (one truncating
-      dictionary-sized collect decides — callers in per-batch loops should
-      hoist this via ``make_extract_fn``); (2) the island-parity window
-      replay when the gazetteer is uni/bigram-only (k ≤ 2, derived) AND the
-      corpus is large (``n_docs`` ≥ EXTRACT_WINDOWS_MIN_DOCS when the caller
-      supplies it — run_pipeline does — else Catalyst scan-stats ≥
-      EXTRACT_WINDOWS_MIN_BYTES); (3) the sparse greedy decomposition
-      otherwise. All are pure Catalyst and bit-equal, so the choice is a
-      plan decision, never a semantics one.
-    - ``literal`` / ``sparse`` / ``fold`` / ``windows`` — force one
-      formulation (fold = the direct candidate-array cursor fold; kept as
-      the reference formulation the others are pinned against).
-
-    ``surfaces`` (round 6): the DISTINCT surface-form list, when the caller
-    already holds it — run_pipeline collects the dictionary-sized gazetteer
-    ONCE per call and feeds every consumer, so the auto gate's truncating
-    collect and the ``max_surface_tokens`` job (both eager driver jobs per
-    invocation, ~0.1 s each of pure latency in a rep loop) are skipped; k
-    derives from the list in Python (identical value). Ignored by the UDF
-    path (which needs its own driver collect anyway).
+    ``surfaces``: the DISTINCT surface-form list, when the caller already
+    holds it — run_pipeline collects the dictionary-sized gazetteer ONCE per
+    call and feeds every consumer, so building this plan runs no Spark job
+    (the truncating collect and ``max_surface_tokens`` are skipped; k
+    derives from the list in Python). Ignored by the UDF path.
 
     ``use_udf=True`` selects the Iterator-pandas-UDF trie scan: the
     gazetteer is collected to the driver (dictionary table ≪ corpus,
@@ -794,109 +682,19 @@ def extract_mentions(
                 F.col("mention_s.tok_start").alias("tok_start"),
             )
         )
-    variant = os.environ.get("SPARK_GRAFT_EXTRACT") or variant or "auto"
-    if variant == "fold":
-        return extract_mentions_sql(docs, gazetteer)
-    if variant == "literal":
-        return extract_mentions_sql_literal(docs, gazetteer, surfaces)
-    if variant == "auto":
-        # dictionary-small gazetteer → whole-gazetteer-literal plan (no
-        # join, no shuffle — tools/bench_cand_ab.py round-5 A/B). One
-        # truncating dictionary-sized collect decides (skipped when the
-        # caller pre-collected the distinct surfaces).
-        if surfaces is not None:
-            if len(surfaces) <= EXTRACT_LITERAL_MAX_SURFACES:
-                return extract_mentions_sql_literal(docs, gazetteer, surfaces)
-        else:
-            rows = (
-                gazetteer.select("surface_form")
-                .distinct()
-                .limit(EXTRACT_LITERAL_MAX_SURFACES + 1)
-                .collect()
-            )
-            if len(rows) <= EXTRACT_LITERAL_MAX_SURFACES:
-                return extract_mentions_sql_literal(
-                    docs, gazetteer, [r[0] for r in rows]
-                )
-    k = (
-        max((s.count(" ") + 1 for s in surfaces), default=1)
-        if surfaces is not None
-        else max_surface_tokens(gazetteer)
-    )
-    if variant == "sparse":
-        return extract_mentions_sql_sparse(docs, gazetteer, k=k)
-    if variant == "windows":
-        return extract_mentions_sql_windows(docs, gazetteer, k=k)
-    if variant != "auto":
-        raise ValueError(f"unknown extract variant: {variant!r}")
-    if k <= 2:
-        if n_docs is not None:
-            large = n_docs >= EXTRACT_WINDOWS_MIN_DOCS
-        else:
-            sz = _plan_size_bytes(docs)
-            large = sz is not None and sz >= EXTRACT_WINDOWS_MIN_BYTES
-        if large:
-            return extract_mentions_sql_windows(docs, gazetteer, k=k)
-    return extract_mentions_sql_sparse(docs, gazetteer, k=k)
+    return _resolve_extract(gazetteer, surfaces)(docs)
 
 
 def make_extract_fn(gazetteer: DataFrame):
-    """Hoist extract_mentions' gazetteer-derived plan decisions out of a
+    """Hoist extract_mentions' gazetteer-derived plan decision out of a
     per-batch loop.
 
-    ``extract_mentions(variant='auto')`` runs one or two eager
+    Without pre-collected surfaces, extract_mentions runs one or two eager
     dictionary-sized Spark jobs at PLAN-BUILD time (the truncating
     literal-cap collect, and ``max_surface_tokens`` when over the cap).
-    That is fine for a one-shot batch query, but inside
-    ``foreachBatch`` (incremental_kg_ingest) it re-ran per micro-batch —
-    fixed driver work that dominates small-batch latency (round-5 review).
-    This resolves the decision ONCE for a gazetteer that is stable across
-    batches and returns ``docs -> mentions`` building the same plan with no
-    eager work. Honors ``$SPARK_GRAFT_EXTRACT`` the same way (forced
-    non-auto variants still derive k once here, not per batch)."""
-    variant = os.environ.get("SPARK_GRAFT_EXTRACT") or "auto"
-    if variant == "fold":
-        return lambda docs: extract_mentions_sql(docs, gazetteer)
-    if variant == "auto":
-        rows = (
-            gazetteer.select("surface_form")
-            .distinct()
-            .limit(EXTRACT_LITERAL_MAX_SURFACES + 1)
-            .collect()
-        )
-        if len(rows) <= EXTRACT_LITERAL_MAX_SURFACES:
-            surfaces = [r[0] for r in rows]
-            return lambda docs: extract_mentions_sql_literal(
-                docs, gazetteer, surfaces
-            )
-        # over the literal cap: per-batch corpora are micro-batch-sized,
-        # so the windows large-corpus promotion never applies — sparse.
-        k = max_surface_tokens(gazetteer)
-        return lambda docs: extract_mentions_sql_sparse(docs, gazetteer, k=k)
-    if variant == "literal":
-        # collect the surfaces ONCE here and close over them — the bare
-        # extract_mentions_sql_literal(docs, gazetteer) form re-runs the
-        # truncating gazetteer collect inside every micro-batch, exactly
-        # the per-batch eager driver job this helper exists to remove
-        # (round-6 fix of a round-5 review note).
-        lit_rows = (
-            gazetteer.select("surface_form")
-            .distinct()
-            .limit(EXTRACT_LITERAL_MAX_SURFACES + 1)
-            .collect()
-        )
-        if len(lit_rows) > EXTRACT_LITERAL_MAX_SURFACES:
-            raise ValueError(
-                "make_extract_fn(variant='literal'): gazetteer exceeds "
-                f"{EXTRACT_LITERAL_MAX_SURFACES} distinct surfaces"
-            )
-        lit_surfaces = [r[0] for r in lit_rows]
-        return lambda docs: extract_mentions_sql_literal(
-            docs, gazetteer, lit_surfaces
-        )
-    k = max_surface_tokens(gazetteer)
-    if variant == "sparse":
-        return lambda docs: extract_mentions_sql_sparse(docs, gazetteer, k=k)
-    if variant == "windows":
-        return lambda docs: extract_mentions_sql_windows(docs, gazetteer, k=k)
-    raise ValueError(f"unknown extract variant: {variant!r}")
+    That is fine for a one-shot batch query, but inside ``foreachBatch``
+    (incremental_kg_ingest) it would re-run per micro-batch — fixed driver
+    work that dominates small-batch latency. This resolves the decision
+    ONCE for a gazetteer that is stable across batches and returns
+    ``docs -> mentions`` building the same plan with no eager work."""
+    return _resolve_extract(gazetteer)

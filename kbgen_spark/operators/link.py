@@ -76,7 +76,7 @@ def link_mentions(
 
     ``pre_normalized=True`` skips the normalize: both extract paths emit
     ``mention`` via EXACT equality against gazetteer surface forms
-    (extract_mentions_sql's join key; detect_mentions_py's set membership),
+    (the Catalyst paths' InSet/join keys; detect_mentions_py's set membership),
     so for pipeline-fed mentions the probe key is the mention itself and
     the regexp/lower/trim pass over the corpus-sized stream is pure
     allocation cost (measured round 4 — the VM's allocation-heavy-JVM

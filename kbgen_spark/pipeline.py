@@ -255,8 +255,8 @@ def run_pipeline(
     patterns = (
         patterns if patterns is not None else FX.build_relation_patterns(spark)
     )
-    # Corpus cardinality, used for two size-adaptive plan decisions (extract
-    # variant; fan-out checkpoint mode). interleave preserves row count, so
+    # Corpus cardinality, used for one size-adaptive plan decision (the link
+    # stage's fan-out checkpoint mode). interleave preserves row count, so
     # the default corpus counts the FLAT parquet scan — a metadata-cheap
     # count (footer row counts; an Iceberg table answers from the snapshot
     # manifest). Overridden corpora count themselves (callers pass
@@ -337,9 +337,7 @@ def run_pipeline(
         "extract",
         _params("extract"),
         in_fp,
-        lambda: extract_mentions(
-            docs, gazetteer, n_docs=n_docs, surfaces=_surfaces()
-        ),
+        lambda: extract_mentions(docs, gazetteer, surfaces=_surfaces()),
         fan_out=False,  # consumed only by link
     )
     run.stages["extract"] = ext

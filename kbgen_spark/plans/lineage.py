@@ -104,7 +104,7 @@ def _cleanup_fanout_dirs() -> None:
 
 def release_fanouts() -> None:
     """Unpersist every DataFrame materialized by materialize_fanout's
-    persist-based modes (disk/local). CacheManager holds STRONG refs to
+    persist-based (disk) mode. CacheManager holds STRONG refs to
     persisted plans — dropping the Python handle does NOT free the blocks
     (and an identical re-built plan would silently cache-hit stale data) —
     so long sessions that run the pipeline repeatedly (bench repeat loops,
@@ -128,68 +128,44 @@ def release_fanouts() -> None:
 # was the entire 4.0→12.0 s round-4 driver-bench regression). Catalyst plan
 # stats can't see corpus scale through localCheckpoint/replicate plans
 # (measured: sizeInBytes is identical at x4 and x64 replication), so the
-# size term is an explicit caller hint, same pattern as extract's n_docs.
+# size term is an explicit caller hint.
 FANOUT_PARQUET_MIN_ROWS = 50_000
 
 
-def materialize_fanout(
-    df: DataFrame, mode: str | None = None, scale_hint: int | None = None
-) -> DataFrame:
+def materialize_fanout(df: DataFrame, scale_hint: int | None = None) -> DataFrame:
     """Materialize a fan-out stage output exactly once (consumed by several
-    downstream branches). Three storage paths, selectable via
-    ``$SPARK_GRAFT_CKPT``; measured head-to-head at 2 and 8 pinned cores,
-    160k docs (tools/bench_isolate.py) AND — round 4, after the round-3
-    disk default regressed the driver bench 43% at local[32] — at the
-    driver's own 32 threads (BENCH/BASELINE.md):
+    downstream branches). Two storage paths, chosen from the session's
+    parallelism and the caller's row-count hint; measured head-to-head at 2
+    and 8 pinned cores, 160k docs AND — round 4, after the round-3 disk
+    default regressed the driver bench 43% at local[32] — at the driver's
+    own 32 threads (BENCH/BASELINE.md, PLANS.md):
 
-    - ``auto`` (default): ``parquet`` only when the input is known
-      corpus-scale (``scale_hint`` ≥ FANOUT_PARQUET_MIN_ROWS — callers that
-      know the corpus cardinality pass it; run_pipeline does) AND the
-      session is ≥16-way parallel; ``disk`` otherwise. At local[32] on the
-      80k-doc pipeline fan-out parquet wins (min-of-3 A/B ×3 alternating
-      passes: parquet 9.2 s / disk 10.5 / local 12.7) because the
+    - ``parquet`` only when the input is known corpus-scale (``scale_hint``
+      ≥ FANOUT_PARQUET_MIN_ROWS — callers that know the corpus cardinality
+      pass it; run_pipeline does) AND the session is ≥16-way parallel. At
+      local[32] on the 80k-doc pipeline fan-out parquet wins (min-of-3 A/B
+      ×3 alternating passes: parquet 9.2 s / disk 10.5) because the
       persist+count job serializes through the shared block manager while
-      the parquet write commits purely per-task; on SMALL inputs and at 2–8
-      pinned cores disk wins everywhere measured (round-4 regression note
-      above), so disk is the no-information default — its worst measured
-      penalty is ~13% at 32 threads, parquet's is 3-5x on small inputs.
-    - ``disk``: ``persist(DISK_ONLY)`` + count. Tasks spill serialized
-      blocks to executor-local disk (tmpfs here) in parallel and never
-      touch the deserialized memory store, so there is no shared
-      memory-store lock and no GC amplification. Checkpoint cost over the
-      un-checkpointed slice: +23.6 s @2 cores / +2.9 s @8 — the cheapest
-      AND best-scaling option at low core counts.
-    - ``parquet``: write to ``spark.local.dir`` and re-read — a fresh
-      columnar scan downstream; consumers get column pruning, and on
-      clusters the re-read can go to DFS.
-    - ``local``: ``localCheckpoint(eager=True)`` — deserialized block-
-      manager storage: the single shared memory store every block write
-      serializes through; kept for comparison (worst at every measured
-      parallelism).
-    """
-    mode = mode or os.environ.get("SPARK_GRAFT_CKPT", "auto")
-    if mode == "auto":
-        wide = df.sparkSession.sparkContext.defaultParallelism >= 16
-        big = scale_hint is not None and scale_hint >= FANOUT_PARQUET_MIN_ROWS
-        mode = "parquet" if (wide and big) else "disk"
-    if mode == "none":
-        # no materialization: downstream consumers recompute the stage's
-        # subtree. Correct (everything is deterministic) and competitive
-        # when the subtree is cheap JVM work — A/B-able per run.
-        return df
-    if mode == "local":
-        out = df.localCheckpoint(eager=True)
-        _FANOUT_PERSISTED.append(out)
-        return out
-    if mode == "disk":
+      the parquet write commits purely per-task. The output is written to
+      ``spark.local.dir`` and re-read — a fresh columnar scan downstream;
+      consumers get column pruning, and on clusters the re-read can go to
+      DFS.
+    - ``disk`` otherwise: ``persist(DISK_ONLY)`` + count. Tasks spill
+      serialized blocks to executor-local disk in parallel and never touch
+      the deserialized memory store, so there is no shared memory-store
+      lock and no GC amplification. On SMALL inputs and at 2–8 pinned cores
+      disk wins everywhere measured (round-4 regression note above), so it
+      is the no-information default — its worst measured penalty is ~13% at
+      32 threads, parquet's is 3-5x on small inputs."""
+    wide = df.sparkSession.sparkContext.defaultParallelism >= 16
+    big = scale_hint is not None and scale_hint >= FANOUT_PARQUET_MIN_ROWS
+    if not (wide and big):
         from pyspark import StorageLevel
 
         out = df.persist(StorageLevel.DISK_ONLY)
         out.count()
         _FANOUT_PERSISTED.append(out)
         return out
-    if mode != "parquet":
-        raise ValueError(f"unknown SPARK_GRAFT_CKPT mode: {mode!r}")
     import atexit
     import uuid
 

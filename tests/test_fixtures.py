@@ -91,9 +91,10 @@ def test_gazetteer_matches_bruteforce_reference(flat_docs, gazetteer):
         ((c, g) for (n, g), c in cnt.items() if n == 1),
         key=lambda x: (-x[0], x[1]),
     )
-    expected = {}
-    for rank0, (c, g) in enumerate(uni):
-        expected[g] = rank0 + 1
+    # (surface, rank) pairs, duplicates kept: a plural variant that
+    # collides with a real unigram must show up as a second row, not
+    # silently replace the first.
+    ranks = [(g, rank0 + 1) for rank0, (c, g) in enumerate(uni)]
     n_uni = len(uni)
     for n, quota in sorted(FX.N_NGRAM_PHRASES.items()):
         grams = sorted(
@@ -102,21 +103,24 @@ def test_gazetteer_matches_bruteforce_reference(flat_docs, gazetteer):
         )[:quota]
         off = FX._phrase_rank_offset(n)
         for nrank0, (c, g) in enumerate(grams):
-            expected[g] = nrank0 + 1 + off + n_uni
+            ranks.append((g, nrank0 + 1 + off + n_uni))
     # plural variants of the top-N single-token surfaces share the entity
-    for g, rank in list(expected.items()):
-        if rank <= FX.N_PLURAL_VARIANTS and " " not in g:
-            expected[g + "s"] = rank
-    exp_rows = {
-        sf: (
+    ranks += [
+        (g + "s", rank)
+        for g, rank in ranks
+        if rank <= FX.N_PLURAL_VARIANTS and " " not in g
+    ]
+    expected = sorted(
+        (
+            sf,
             f"E{rank:05d}",
             FX._TYPE_CYCLE[(rank - 1) % len(FX._TYPE_CYCLE)],
             1.0 / rank,
         )
-        for sf, rank in expected.items()
-    }
-    got = {
-        r["surface_form"]: (r["entity_id"], r["entity_type"], r["prior"])
+        for sf, rank in ranks
+    )
+    got = sorted(
+        (r["surface_form"], r["entity_id"], r["entity_type"], r["prior"])
         for r in gazetteer.collect()
-    }
-    assert got == exp_rows
+    )
+    assert got == expected

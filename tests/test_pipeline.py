@@ -3,8 +3,11 @@
 
 from __future__ import annotations
 
+import random
+
 import golden_gen as G
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from kbgen_spark import fixtures as FX
@@ -12,6 +15,8 @@ from kbgen_spark.operators.canonicalize import similar_surface_edges
 from kbgen_spark.operators.extract import (
     detect_mentions_py,
     extract_mentions,
+    extract_mentions_sql_literal,
+    extract_mentions_sql_sparse,
 )
 from kbgen_spark.operators.link import link_mentions
 from kbgen_spark.pipeline import (
@@ -25,194 +30,151 @@ from kbgen_spark.plans.lineage import ParquetSnapshotStore
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_mention_udf_matches_python_reference(spark, docs, gazetteer):
-    got = (
-        extract_mentions(docs, gazetteer)
-        .orderBy("doc_id", "span_idx", "tok_start")
-        .toPandas()
+_SPANS_T = (
+    "doc_id string, spans array<struct<kind:string,text:string,"
+    "media_ref:string,offset:int>>"
+)
+
+
+def _one_span_input(spark, surfaces, texts):
+    """(docs, gazetteer) with one text span per doc."""
+    docs = spark.createDataFrame(
+        [(f"d{i:03d}", [("text", t, None, 0)]) for i, t in enumerate(texts)],
+        _SPANS_T,
     )
+    gaz = spark.createDataFrame([(s,) for s in sorted(surfaces)], "surface_form string")
+    return docs, gaz
+
+
+def _random_streams(seed):
+    """200 seeded token streams over a 3-letter alphabet."""
+    rng = random.Random(seed)
+    return [
+        " ".join([rng.choice(["a", "b", "c"]) for _ in range(rng.randint(0, 14))])
+        for _ in range(200)
+    ]
+
+
+def _extract_input(request, spark, name):
+    """The four extract inputs:
+
+    - fixture: the fixture docs and k=5 gazetteer (nested prefixes);
+    - ktoken: 3-5-token surfaces with nested prefixes that force real
+      longest-match decisions;
+    - dense_unigram: every token a unigram surface, overlapping multi
+      surfaces up to 3 tokens (dense unigrams + overlapping multi islands);
+    - islands: every adjacent pair a bigram surface, so each span is one
+      maximal island of bigram candidates with unigrams competing at every
+      blocked position."""
+    if name == "fixture":
+        return request.getfixturevalue("docs"), request.getfixturevalue("gazetteer")
+    if name == "ktoken":
+        surfaces = {
+            "university",
+            "university of california",
+            "university of california berkeley campus",
+            "of",
+            "california",
+            "berkeley campus",
+            "state of the art",
+            "art",
+            "the",
+        }
+        texts = [
+            "university of california berkeley campus is large",
+            "the university of california system",
+            "a state of the art university of california berkeley campus",
+            "university of of california",
+            "state of the state of the art art",
+            "",
+            "university",
+            "of university california of",
+        ]
+        return _one_span_input(spark, surfaces, texts)
+    if name == "dense_unigram":
+        surfaces = {"a", "b", "a b", "b a", "a a", "a b a", "b b b", "b a a"}
+        return _one_span_input(spark, surfaces, _random_streams(7))
+    surfaces = {"a b", "b a", "a a", "b b", "a", "b"}
+    return _one_span_input(spark, surfaces, _random_streams(42))
+
+
+def _reference_mentions(docs, gazetteer) -> list:
+    """detect_mentions_py over every text span, as sorted output rows."""
     surfaces = {r["surface_form"] for r in gazetteer.collect()}
-    by_first = {}
+    by_first: dict = {}
     for s in surfaces:
         by_first.setdefault(s.split(" ")[0], []).append(s)
-    exp_rows = []
+    rows = []
     for d in docs.collect():
         for span_idx, s in enumerate(d["spans"]):
             if s["kind"] != "text":
                 continue
             for mention, tok_start in detect_mentions_py(s["text"], surfaces, by_first):
-                exp_rows.append((d["doc_id"], span_idx, s["offset"], mention, tok_start))
-    exp = pd.DataFrame(
-        exp_rows, columns=["doc_id", "span_idx", "offset", "mention", "tok_start"]
-    ).sort_values(["doc_id", "span_idx", "tok_start"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(got.reset_index(drop=True), exp, check_dtype=False)
-    assert len(got) > 0
+                rows.append((d["doc_id"], span_idx, s["offset"], mention, tok_start))
+    return sorted(rows)
 
 
-def test_mention_sql_path_equals_udf_path(spark, docs, gazetteer):
-    """Round-4: the default pure-Catalyst path must be bit-identical to the
-    pandas-UDF trie scan it replaced (VERDICT r3 'Next round' #3)."""
-    sql_path = extract_mentions(docs, gazetteer)
-    udf_path = extract_mentions(docs, gazetteer, use_udf=True)
-    assert sql_path.exceptAll(udf_path).count() == 0
-    assert udf_path.exceptAll(sql_path).count() == 0
-    # and the default plan contains no Python evaluation node at all
-    plan = sql_path._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+_FORMULATIONS = {
+    "literal": extract_mentions_sql_literal,
+    "sparse": extract_mentions_sql_sparse,
+    "udf": lambda docs, gaz: extract_mentions(docs, gaz, use_udf=True),
+}
 
 
-def test_mention_window_replay_equals_fold(spark, docs, gazetteer):
-    """Three-way formulation pin: the island-parity WINDOW replay
-    (extract_mentions_sql_windows, SPARK_GRAFT_EXTRACT=windows) must be
-    bit-identical to the default cursor-FOLD form (the literal reference
-    automaton). Together with the udf-vs-sql pin above, all three
-    independent formulations agree — the strongest evidence that the
-    closed-form parity argument is exact, not fixture luck.
-
-    The window replay is the k<=2 closed form, so it runs on the gazetteer
-    restricted to uni/bigram surfaces (round 5: the fixture gazetteer now
-    carries 3-5-token phrases) and must RAISE on the full gazetteer instead
-    of silently dropping longer surfaces."""
-    import pytest
-
-    from kbgen_spark.operators.extract import (
-        extract_mentions_sql,
-        extract_mentions_sql_windows,
-    )
-
-    gaz2 = gazetteer.filter(F.size(F.split("surface_form", " ")) <= 2)
-    win = extract_mentions_sql_windows(docs, gaz2)
-    fold = extract_mentions_sql(docs, gaz2)
-    assert win.exceptAll(fold).count() == 0
-    assert fold.exceptAll(win).count() == 0
-    with pytest.raises(ValueError, match="k<=2 closed form"):
-        extract_mentions_sql_windows(docs, gazetteer)
+@pytest.mark.parametrize("inp", ["fixture", "ktoken", "dense_unigram", "islands"])
+@pytest.mark.parametrize("formulation", sorted(_FORMULATIONS))
+def test_extract_matches_python_reference(request, spark, formulation, inp):
+    """Each extract formulation emits exactly the rows of the pure-python
+    greedy longest-match reference (duplicates kept), and the Catalyst
+    formulations carry no Python node in their plans."""
+    docs, gaz = _extract_input(request, spark, inp)
+    out = _FORMULATIONS[formulation](docs, gaz)
+    exp = _reference_mentions(docs, gaz)
+    assert exp, "input must produce mentions"
+    assert sorted(tuple(r) for r in out.collect()) == exp
+    if formulation != "udf":
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
-def test_mention_ktoken_surfaces_three_way(spark):
-    """Round-5 generalization pin (VERDICT r4 'Next round' #1): surfaces of
-    3-5 tokens — including nested prefixes that force real longest-match
-    decisions — agree bit-exactly across the Catalyst fold, the pandas-UDF
-    trie, and the pure-python reference."""
-    from kbgen_spark.operators.extract import extract_mentions
+def test_extract_literal_rejects_surfaces_over_cap(spark):
+    """Caller-supplied surfaces obey the literal cap too, and
+    extract_mentions takes the sparse formulation above it."""
+    from kbgen_spark.operators.extract import EXTRACT_LITERAL_MAX_SURFACES
 
-    surfaces = {
-        "university",
-        "university of california",
-        "university of california berkeley campus",
-        "of",
-        "california",
-        "berkeley campus",
-        "state of the art",
-        "art",
-        "the",
-    }
-    texts = [
-        "university of california berkeley campus is large",
-        "the university of california system",
-        "a state of the art university of california berkeley campus",
-        "university of of california",
-        "state of the state of the art art",
-        "",
-        "university",
-        "of university california of",
-    ]
-    docs = spark.createDataFrame(
-        [(f"d{i}", [("text", t, None, 0)]) for i, t in enumerate(texts)],
-        "doc_id string, spans array<struct<kind:string,text:string,"
-        "media_ref:string,offset:int>>",
-    )
-    gaz = spark.createDataFrame(
-        [(s,) for s in sorted(surfaces)], "surface_form string"
-    )
-    by_first: dict = {}
-    for s in surfaces:
-        by_first.setdefault(s.split(" ")[0], []).append(s)
-    exp = set()
-    for i, t in enumerate(texts):
-        from kbgen_spark.operators.extract import detect_mentions_py
-
-        for mention, tok_start in detect_mentions_py(t, surfaces, by_first):
-            exp.add((f"d{i}", 0, 0, mention, tok_start))
-    from kbgen_spark.operators.extract import (
-        extract_mentions_sql,
-        extract_mentions_sql_literal,
-    )
-
-    auto = {tuple(r) for r in extract_mentions(docs, gaz).collect()}
-    fold = {tuple(r) for r in extract_mentions_sql(docs, gaz).collect()}
-    lit = {tuple(r) for r in extract_mentions_sql_literal(docs, gaz).collect()}
-    udf = {tuple(r) for r in extract_mentions(docs, gaz, use_udf=True).collect()}
-    assert auto == exp
-    assert fold == exp
-    assert lit == exp
-    assert udf == exp
-    # greedy longest-match sanity on the headline case
-    assert ("d0", 0, 0, "university of california berkeley campus", 0) in exp
+    surfaces = [f"w{i:04d}" for i in range(EXTRACT_LITERAL_MAX_SURFACES + 1)]
+    docs, gaz = _one_span_input(spark, surfaces, ["w0001 x w1024", "w0000", ""])
+    with pytest.raises(ValueError, match="exceed"):
+        extract_mentions_sql_literal(docs, gaz, surfaces)
+    out = extract_mentions(docs, gaz, surfaces=surfaces)
+    assert "Join" in out._jdf.queryExecution().executedPlan().toString()
+    assert sorted(tuple(r) for r in out.collect()) == _reference_mentions(docs, gaz)
 
 
-def test_mention_sparse_equals_fold_any_k(spark, docs, gazetteer):
-    """Round-5 formulation pin: the SPARSE decomposition (greedy fold over
-    multi-token candidates only + coverage anti-join for unigrams — the
-    shipped default) is bit-equal to the direct cursor fold on (a) the
-    fixture gazetteer (k=5 with nested prefixes) and (b) a dense-unigram
-    adversarial corpus where almost every token is a unigram candidate and
-    overlapping multi candidates force real cursor decisions."""
-    import random
+def test_extract_with_surfaces_runs_no_job_at_plan_build(spark, docs, gazetteer):
+    """With the distinct surfaces supplied, building the extract plan
+    submits no Spark job; without them the size decision costs one."""
+    surfaces = sorted({r["surface_form"] for r in gazetteer.collect()})
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
 
-    from kbgen_spark.operators.extract import (
-        extract_mentions_sql,
-        extract_mentions_sql_sparse,
-    )
+    def job_ids() -> set:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup())
 
-    sparse = extract_mentions_sql_sparse(docs, gazetteer)
-    fold = extract_mentions_sql(docs, gazetteer)
-    assert sparse.exceptAll(fold).count() == 0
-    assert fold.exceptAll(sparse).count() == 0
-    assert sparse.count() > 0
-    # no Python node in the sparse plan either
-    plan = sparse._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-
-    # adversarial: 2-letter alphabet, every token a unigram surface, nested
-    # multi surfaces up to 3 tokens → dense uni + overlapping multi islands
-    rng = random.Random(7)
-    surfaces = {"a", "b", "a b", "b a", "a a", "a b a", "b b b", "b a a"}
-    by_first: dict = {}
-    for s in surfaces:
-        by_first.setdefault(s.split(" ")[0], []).append(s)
-    doc_rows, exp_rows = [], []
-    for i in range(200):
-        toks = [rng.choice(["a", "b", "c"]) for _ in range(rng.randint(0, 14))]
-        text = " ".join(toks)
-        doc_rows.append((f"d{i:03d}", [("text", text, None, 0)]))
-        for mention, tok_start in detect_mentions_py(text, surfaces, by_first):
-            exp_rows.append((f"d{i:03d}", 0, 0, mention, tok_start))
-    adocs = spark.createDataFrame(
-        doc_rows,
-        "doc_id string, spans array<struct<kind:string,text:string,"
-        "media_ref:string,offset:int>>",
-    )
-    agaz = spark.createDataFrame(
-        [(s,) for s in sorted(surfaces)], "surface_form string"
-    )
-    got = {
-        tuple(r) for r in extract_mentions_sql_sparse(adocs, agaz).collect()
-    }
-    assert got == set(exp_rows)
+    before = job_ids()
+    extract_mentions(docs, gazetteer, surfaces=surfaces)
+    assert job_ids() == before
+    extract_mentions(docs, gazetteer)
+    assert job_ids() != before
 
 
 def test_extract_literal_no_shuffle_no_join(spark, docs, gazetteer):
     """Round-5: the whole-gazetteer-literal extract (the auto default for
     dictionary-small gazetteers) must be ONE projection — its executed plan
     contains no shuffle exchange, no join, and no Python node. Values are
-    pinned equal to the fold in the three-way tests; this pins the PLAN
+    pinned by test_extract_matches_python_reference; this pins the PLAN
     SHAPE that makes it the 100 TB-scalable default."""
-    from kbgen_spark.operators.extract import (
-        extract_mentions,
-        extract_mentions_sql_literal,
-    )
-
     out = extract_mentions_sql_literal(docs, gazetteer)
     out.count()
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -228,57 +190,22 @@ def test_extract_literal_no_shuffle_no_join(spark, docs, gazetteer):
     assert "Join" not in auto_plan
 
 
-def test_candidate_generation_literal_equals_join_fallback(spark, docs, gazetteer):
+def test_candidate_generation_literal_equals_join_fallback(
+    spark, docs, gazetteer, monkeypatch
+):
     """Round-5: the anchor-literal fast path (anchor→fmax map as a plan
     literal, phrases built array-side) must produce exactly the same
     candidate set as the large-gazetteer nxt-carry broadcast-join fallback
-    (anchor_literal_max=0) on the k=5 fixture gazetteer."""
+    (ANCHOR_LITERAL_MAX=0) on the k=5 fixture gazetteer."""
+    from kbgen_spark.operators import extract
     from kbgen_spark.operators.extract import candidate_mentions
 
     lit = candidate_mentions(docs, gazetteer)
-    jn = candidate_mentions(docs, gazetteer, anchor_literal_max=0)
+    monkeypatch.setattr(extract, "ANCHOR_LITERAL_MAX", 0)
+    jn = candidate_mentions(docs, gazetteer)
     assert lit.exceptAll(jn).count() == 0
     assert jn.exceptAll(lit).count() == 0
     assert lit.count() > 0
-
-
-def test_mention_window_replay_on_adversarial_islands(spark):
-    """Island stress for the parity replay: a 2-letter alphabet where EVERY
-    adjacent pair is a bigram surface makes each span one maximal island of
-    bigram candidates (the regime where the odd-parity unrolling does all
-    the work), with unigram surfaces competing at every blocked position.
-    200 seeded random streams are batch-compared to detect_mentions_py."""
-    import random
-
-    from kbgen_spark.operators.extract import (
-        extract_mentions_sql_windows as extract_mentions_sql,
-    )
-
-    rng = random.Random(42)
-    surfaces = {"a b", "b a", "a a", "b b", "a", "b"}
-    by_first: dict = {}
-    for s in surfaces:
-        by_first.setdefault(s.split(" ")[0], []).append(s)
-    doc_rows, exp_rows = [], []
-    for i in range(200):
-        toks = [rng.choice(["a", "b", "c"]) for _ in range(rng.randint(0, 14))]
-        text = " ".join(toks)
-        doc_rows.append(
-            (f"d{i:03d}", [("text", text, None, 0)])
-        )
-        for mention, tok_start in detect_mentions_py(text, surfaces, by_first):
-            exp_rows.append((f"d{i:03d}", 0, 0, mention, tok_start))
-    docs = spark.createDataFrame(
-        doc_rows,
-        "doc_id string, spans array<struct<kind:string,text:string,"
-        "media_ref:string,offset:int>>",
-    )
-    gaz = spark.createDataFrame([(s,) for s in sorted(surfaces)], "surface_form string")
-    got = {
-        tuple(r)
-        for r in extract_mentions_sql(docs, gaz).collect()
-    }
-    assert got == set(exp_rows)
 
 
 def test_phrase_mentions_are_detected(spark, docs, gazetteer):
