@@ -1,5 +1,6 @@
 """Benchmark harness — one JSON line for the driver (per round), headline
-queries over $SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS].
+queries over $SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS]
+(default: all cores).
 
 The KG pipeline is benchmarked over a deterministically replicated corpus
 ($SPARK_GRAFT_REPLICATE × the sf documents, FIXTURES.md §1) so the timed
@@ -184,7 +185,7 @@ def run_bench(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     replicate = int(os.environ.get("SPARK_GRAFT_REPLICATE", "4"))
     only_pipeline = "--pipeline-only" in sys.argv
     print(json.dumps(run_bench(sf_dir, cpus, replicate, only_pipeline)))

@@ -96,7 +96,6 @@ def dedup_minhash_lsh(
     threshold: float = 0.7,
     text_col: str = "text",
     shingle_hash=None,
-    fanout_scale_hint: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs (a, b, jaccard) with exact word-shingle Jaccard
     verification of LSH candidates.
@@ -107,17 +106,11 @@ def dedup_minhash_lsh(
     again behind the candidate join). Eager, not lazy: the round-2 A/B showed
     the DAG scheduler submits fan-out consumers before a lazy checkpoint has
     materialized blocks, recomputing the upstream subtree per consumer.
-
-    ``fanout_scale_hint``: approximate corpus row count, forwarded to
-    materialize_fanout's auto mode — a 100 TB dedup run passes its (metadata-
-    cheap) table count so the shingle checkpoint goes to parquet/DFS; with no
-    hint the auto mode persists to executor-local disk, the measured winner
-    for dictionary-small corpora (round-4 regression note in lineage.py)."""
+    materialize_fanout persists it to executor-local disk; the caller frees
+    it with release_fanouts once the result has been consumed."""
     from kbgen_spark.plans.lineage import materialize_fanout
 
-    sh = materialize_fanout(
-        doc_shingle_sets(docs, shingle_n, text_col), scale_hint=fanout_scale_hint
-    )
+    sh = materialize_fanout(doc_shingle_sets(docs, shingle_n, text_col))
     sig = minhash_signatures_from_sets(sh, k, shingle_hash)
     cand = lsh_candidate_pairs(sig, "doc_id", k, bands)
     a = sh.select(F.col("doc_id").alias("a"), F.col("sh").alias("sh_a"))
@@ -286,7 +279,6 @@ def dedup_ngram_jaccard(
     docs: DataFrame,
     threshold: float = 0.5,
     text_col: str = "text",
-    fanout_scale_hint: int | None = None,
 ) -> DataFrame:
     """EXACT token-set Jaccard join with prefix filtering (the AllPairs /
     PPJoin scheme — Bayardo et al., WWW 2007; Xiao et al., WWW 2008 — both
@@ -317,16 +309,14 @@ def dedup_ngram_jaccard(
     The rare-first token-set table fans out to FOUR consumers (the two
     posting aliases of the candidate self-join and the two sides of the
     verify join), so it is materialized exactly once via materialize_fanout
-    — same idiom and ``fanout_scale_hint`` contract as dedup_minhash_lsh
-    above; without it the tokenize+df+regroup subtree (two shuffles over
-    the full token stream) re-executes per consumer (measured 4x: the
+    — same idiom as dedup_minhash_lsh above; without it the
+    tokenize+df+regroup subtree (two shuffles over the full token stream)
+    re-executes per consumer (measured 4x: the
     from-scratch query dropped 26.8 s → 7.6 s at sf0.1/local[32] when the
     fan-out landed, identical 964,854-pair output)."""
     from kbgen_spark.plans.lineage import materialize_fanout
 
-    sets = materialize_fanout(
-        rare_first_token_sets(docs, text_col), scale_hint=fanout_scale_hint
-    )
+    sets = materialize_fanout(rare_first_token_sets(docs, text_col))
     cand = ngram_prefix_candidates(sets, threshold)
     sa = sets.select(F.col("doc_id").alias("a"), F.col("tok_arr").alias("ta"), F.col("sz").alias("sza"))
     sb = sets.select(F.col("doc_id").alias("b"), F.col("tok_arr").alias("tb"), F.col("sz").alias("szb"))

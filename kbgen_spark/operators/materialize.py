@@ -194,9 +194,9 @@ def split_type_assertions(
 
 
 def write_triples(triples: DataFrame, path: str, pred_buckets: int = 16) -> None:
-    """S5 — partitioned triples sink. Iceberg `partitionedBy(bucket(...))` when
-    a catalog is configured; parquet fallback partitions by a derived
-    pred_bucket so hot predicates split across files (SURVEY §7.3)."""
+    """S5 — partitioned triples sink: parquet partitioned by a derived
+    pred_bucket (xxhash64 of pred, subj) so hot predicates split across
+    files (SURVEY §7.3)."""
     out = triples.withColumn(
         "pred_bucket", F.pmod(F.xxhash64("pred", "subj"), F.lit(pred_buckets))
     )

@@ -249,19 +249,11 @@ def run_pipeline(
     """
     overrides = {"docs": docs, "gazetteer": gazetteer, "patterns": patterns}
     flat = FX.load_flat_documents(spark, sf_dir)
-    docs_overridden = docs is not None
     docs = docs if docs is not None else FX.interleave_documents(flat)
     gazetteer = gazetteer if gazetteer is not None else FX.build_gazetteer(flat)
     patterns = (
         patterns if patterns is not None else FX.build_relation_patterns(spark)
     )
-    # Corpus cardinality, used for one size-adaptive plan decision (the link
-    # stage's fan-out checkpoint mode). interleave preserves row count, so
-    # the default corpus counts the FLAT parquet scan — a metadata-cheap
-    # count (footer row counts; an Iceberg table answers from the snapshot
-    # manifest). Overridden corpora count themselves (callers pass
-    # checkpointed/derived frames).
-    n_docs = (docs if docs_overridden else flat).count()
 
     # ONE fused, lazily-run gazetteer collect serves every dictionary-sized
     # plan decision (round 6, guide §5 "the driver should do almost no data
@@ -388,7 +380,6 @@ def run_pipeline(
             ),
             pre_normalized_checked=_norm_checked_safe() is not None,
         ),
-        scale_hint=n_docs,  # links ∝ corpus: fan-out mode follows corpus scale
     )
     run.stages["link"] = lnk
     if lnk.skipped:

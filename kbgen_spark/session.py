@@ -1,7 +1,7 @@
 """SparkSession factory with scale-oriented defaults.
 
-Defaults chosen for a 1000-executor / 100 TB deployment and scaled down by
-env for the local[32] sandbox:
+Defaults chosen for a 1000-executor / 100 TB deployment; the driver heap
+is sized from the host's physical RAM so a default session starts anywhere:
 
 - AQE on (runtime coalescing, SMJ→broadcast conversion, skew-join splitting).
 - Explicit skew-join enablement (SURVEY.md §2.12 K3).
@@ -15,7 +15,19 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+DEFAULT_SHUFFLE_PARTITIONS = 32
+# ParallelGC beats G1 on this batch-throughput workload at every measured
+# core count (BENCH/raw/jvmopts_ab_x64_r5.json). On a real cluster the same
+# flag belongs in spark.executor.extraJavaOptions.
+DEFAULT_DRIVER_JAVA_OPTS = "-XX:+UseParallelGC"
+
+
+def _default_driver_mem_mb() -> int:
+    """Driver heap in MB: ~60% of physical RAM. In local mode the driver JVM
+    hosts every executor thread, so it gets most of the box, leaving the
+    rest for Python workers, off-heap buffers and the page cache."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return int(ram * 0.6) >> 20
 
 
 def _default_local_dir() -> str | None:
@@ -48,6 +60,7 @@ def get_spark(
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{_default_driver_mem_mb()}m"
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -71,30 +84,15 @@ def get_spark(
         # Deterministic timestamp semantics vs the DuckDB oracle.
         .config("spark.sql.session.timeZone", "UTC")
         # local mode: the driver JVM hosts every executor thread — size the
-        # heap for all-of-them (32 tasks × shuffle/agg buffers), not a
+        # heap for all of them (tasks × shuffle/agg buffers), not a
         # driver-only 1-2g default.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", mem)
         .config("spark.ui.enabled", "false")
     )
-    # Driver JVM flags (local mode hosts all executor threads in the driver
-    # JVM, so these govern the whole engine here; on a real cluster the same
-    # flags belong in spark.executor.extraJavaOptions — this is the standard
-    # production executor recipe). Measured A/B, full pipeline ×64 pinned
-    # (BENCH/raw/jvmopts_ab_x64_r5.json): Xms=Xmx + AlwaysPreTouch commits
-    # and zeroes the heap at JVM start — moving kernel page-faulting (the
-    # box's worst-scaling primitive, hwceiling 0.31; a production executor
-    # pays it once at startup and amortizes it over hours) out of the
-    # steady-state region — and ParallelGC beats G1 on this batch-throughput
-    # workload at every measured core count. The combination is the only arm
-    # that was fastest at BOTH 2 and 8 pinned cores (35.3 s vs baseline
-    # 38.2 @8; 88.8 vs 90.0 @2, min-of-2 each): selection is by absolute
-    # throughput per level, never by the scaling ratio.
-    # $SPARK_GRAFT_DRIVER_JAVA_OPTS overrides; set to "" to disable.
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
-    java_opts = os.environ.get(
-        "SPARK_GRAFT_DRIVER_JAVA_OPTS",
-        f"-Xms{mem} -XX:+AlwaysPreTouch -XX:+UseParallelGC",
-    )
+    # $SPARK_GRAFT_DRIVER_JAVA_OPTS overrides; set to "" to disable. The
+    # r5 A/B also favoured -Xms=Xmx + AlwaysPreTouch, but only on a 125 GB
+    # host; committing the whole heap at start is not a safe default.
+    java_opts = os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", DEFAULT_DRIVER_JAVA_OPTS)
     if java_opts:
         builder = builder.config("spark.driver.extraJavaOptions", java_opts)
     local_dir = _default_local_dir()

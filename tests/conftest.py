@@ -1,18 +1,6 @@
 from __future__ import annotations
 
-import os
-
 import pytest
-
-# Tests verify CORRECTNESS at sf0.001/local[4]; the engine's default JVM
-# flags are a THROUGHPUT recipe (-Xms48g -XX:+AlwaysPreTouch commits and
-# zeroes the whole heap at JVM start — worth it for a long job, ~4 min of
-# pure pretouch wall per session on this box, which more than doubled the
-# pytest suite's wall time when the defaults landed). Pin a small lazy heap
-# for the test session (and any subprocess tests) unless the caller already
-# chose; ParallelGC is kept — it is free at startup.
-os.environ.setdefault("SPARK_GRAFT_DRIVER_JAVA_OPTS", "-XX:+UseParallelGC")
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
 
 from kbgen_spark.session import get_spark
 

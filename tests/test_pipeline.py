@@ -391,6 +391,24 @@ def test_resume_output_equals_fresh_run(spark, tmp_path):
     assert triples_fingerprint(resumed.triples) == triples_fingerprint(fresh.triples)
 
 
+def test_run_pipeline_does_not_scan_docs_before_extract(spark, docs, gazetteer, patterns):
+    """Building the extract stage runs no job over the corpus: any scan of
+    these docs raises."""
+    bad_docs = docs.filter(
+        F.when(F.col("doc_id").isNotNull(), F.raise_error(F.lit("docs scanned")))
+        .otherwise(F.lit(True))
+    )
+    run = run_pipeline(
+        spark,
+        SF_DIR,
+        docs=bad_docs,
+        gazetteer=gazetteer,
+        patterns=patterns,
+        stop_after="extract",
+    )
+    assert list(run.stages) == ["extract"]
+
+
 def test_pre_normalized_guard_demotes_on_drifting_gazetteer(spark):
     """ADVICE r4: pre_normalized=True with a caller-supplied gazetteer whose
     surfaces are NOT norm_surface fixed points must fall back to the
