@@ -26,9 +26,6 @@ from pyspark.sql import functions as F
 # --------------------------------------------------------------------------
 
 
-_TABLE_HANDLES: dict = {}
-
-
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy scan handle per (session, path), memoized (round 6, guide §5):
     every ``spark.read.parquet`` call re-lists the path and re-reads the
@@ -37,13 +34,16 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     UNEXECUTED scan node — no data, no results, nothing persisted; every
     action still computes from the parquet files exactly as before (the
     same way any application holds its table handles instead of re-opening
-    them per query)."""
-    key = (id(spark), sf_dir, name)
-    df = _TABLE_HANDLES.get(key)
+    them per query).
+
+    The handles live ON the session object, so they die with it and a later
+    session never sees them. The file listing is fixed at the first read:
+    a table rewritten in place needs a new session."""
+    handles = vars(spark).setdefault("_kbgen_table_handles", {})
+    key = (sf_dir, name)
+    df = handles.get(key)
     if df is None:
-        df = _TABLE_HANDLES.setdefault(
-            key, spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        )
+        df = handles.setdefault(key, spark.read.parquet(f"{sf_dir}/{name}.parquet"))
     return df
 
 
@@ -237,13 +237,14 @@ def q3_top_revenue_orders(spark, sf_dir):
     revenue partial-aggregates per l_orderkey BEFORE any join — lineitem's
     ~4 rows/order collapse in their scan partitions (the table is laid out
     by orderkey, so map-side combine does most of the work) and the joins
-    probe ~orders-sized input instead of lineitem-sized. orders/customer are
-    explicit broadcasts (both ≪ lineitem; AQE chose BHJ already, the hint
-    removes the size-estimate dependence). o_orderkey is unique, so grouping
-    by l_orderkey first then re-aggregating per (o_orderkey, c_mktsegment)
-    is exact algebra — decimal sums are associative — and the driver-hash
-    result is unchanged (verified). Measured 1.83 s → 1.31 s at
-    sf0.1/local[32] (min-of-4)."""
+    probe ~orders-sized input instead of lineitem-sized. orders/customer
+    carry no broadcast hint: under ``autoBroadcastJoinThreshold`` the
+    planner already builds them as broadcast sides (test-pinned at sf0.01),
+    and once they outgrow it the join shuffles instead of broadcasting an
+    unbounded table. o_orderkey is unique, so grouping by l_orderkey first
+    then re-aggregating per (o_orderkey, c_mktsegment) is exact algebra —
+    decimal sums are associative — and the driver-hash result is unchanged
+    (verified). Measured 1.83 s → 1.31 s at sf0.1/local[32] (min-of-4)."""
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
@@ -253,8 +254,8 @@ def q3_top_revenue_orders(spark, sf_dir):
     ).cast("decimal(28,6)")
     per_order = li.groupBy("l_orderkey").agg(F.sum(rev).alias("_rev"))
     return (
-        per_order.join(F.broadcast(o), per_order.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        per_order.join(o, per_order.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
         .groupBy("o_orderkey", "c_mktsegment")
         .agg(F.round(F.sum("_rev"), 4).cast("double").alias("revenue"))
         .orderBy(F.desc("revenue"), F.asc("o_orderkey"))
@@ -273,15 +274,15 @@ def q5_region_nation_revenue(spark, sf_dir):
         F.col("l_extendedprice").cast("decimal(18,2)")
         * (F.lit(1).cast("decimal(18,2)") - F.col("l_discount").cast("decimal(18,2)"))
     ).cast("decimal(28,6)")
-    # Round 6: every dimension side broadcast EXPLICITLY (guide §3.1) —
-    # AQE already converted these to BHJ at runtime from size estimates,
-    # but the hints make the no-lineitem-shuffle plan deterministic (no
-    # dependence on estimates that drift with scale factor) and skip the
-    # AQE re-planning step (measured 1.06 → 0.87 s at sf0.1/local[32],
-    # identical result).
+    # supplier, nation and region stay explicit broadcasts (guide §3.1;
+    # nation/region are fixed-size, supplier is 1/150 of orders). orders
+    # and customer carry no hint: under ``autoBroadcastJoinThreshold`` the
+    # planner already builds them as broadcast sides (test-pinned at
+    # sf0.01), and once they outgrow it the join shuffles instead of
+    # broadcasting an unbounded table.
     return (
-        li.join(F.broadcast(o), li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
         .filter(c.c_nationkey == s.s_nationkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -1009,8 +1010,8 @@ def pipeline_triples_mirror(spark, sf_dir):
     from kbgen_spark import fixtures as FX
     from kbgen_spark.fixtures_openvocab import mirrorable_shingle_hash
     from kbgen_spark.operators.extract import extract_mentions
-    from kbgen_spark.operators.link import link_mentions
-    from kbgen_spark.operators.materialize import apply_canon_map, assemble_triples
+    from kbgen_spark.operators.link import link_and_canonicalize
+    from kbgen_spark.operators.materialize import assemble_triples
     from kbgen_spark.pipeline import build_canon_map
 
     d = _t(spark, sf_dir, "documents")
@@ -1018,8 +1019,7 @@ def pipeline_triples_mirror(spark, sf_dir):
     patterns = FX.build_relation_patterns(spark)
     mentions = extract_mentions(_one_span_docs(d), gaz)
     canon = build_canon_map(gaz, shingle_hash=mirrorable_shingle_hash)
-    links = link_mentions(mentions, gaz, pre_normalized=True)
-    return assemble_triples(apply_canon_map(links, canon), patterns)
+    return assemble_triples(link_and_canonicalize(mentions, gaz, canon), patterns)
 
 
 def emit_m1_sample(spark, sf_dir):

@@ -1,4 +1,4 @@
-"""End-to-end KG construction: extract → link → canonicalize → materialize
+"""End-to-end KG construction: extract → canon → link → materialize
 (SURVEY.md §3.2; north_rule BASELINE.json:14).
 
 Each stage checkpoints through the snapshot store (plans/lineage.py) with
@@ -52,7 +52,7 @@ CANON_LOCAL_THRESHOLD = 100_000
 STAGE_VERSIONS = {
     "extract": 3,  # r3 catalyst fold, r5 k-token generalization
     "canon": 2,  # r4 driver-local fast path
-    "link": 3,  # r4 fused re-key, r5 pre_normalized runtime guard
+    "link": 3,  # r4 fused re-key; later link changes are bit-equal
     "materialize": 1,
 }
 
@@ -255,35 +255,23 @@ def run_pipeline(
         patterns if patterns is not None else FX.build_relation_patterns(spark)
     )
 
-    # ONE fused, lazily-run gazetteer collect serves every dictionary-sized
-    # plan decision (round 6, guide §5 "the driver should do almost no data
-    # work"): the extract literal gate, canon's local-path rows, and the
-    # link stage's norm_surface fixed-point guard each used to run their own
-    # eager driver job per pipeline call — ~0.1 s of pure job latency each,
-    # serial, every bench rep. The collect is capped at the canon local
-    # threshold (same truncation contract); an over-threshold gazetteer
-    # falls back to each callee's own distributed/collecting path. The norm
-    # check evaluates the SAME Catalyst norm_surface expression the link
-    # guard runs, so pre_normalized_checked skips a job without weakening
-    # the guard. Deferred into the stage lambdas so a store-backed resume
-    # that skips all stages never pays it.
-    from kbgen_spark.functions.text import norm_surface
-
+    # ONE lazily-run gazetteer collect serves both dictionary-sized plan
+    # decisions (round 6, guide §5 "the driver should do almost no data
+    # work"): the extract literal gate and canon's local-path rows each used
+    # to run their own eager driver job per pipeline call — ~0.1 s of pure
+    # job latency each, serial, every rep. The collect is capped at the
+    # canon local threshold (same truncation contract); an over-threshold
+    # gazetteer falls back to each callee's own distributed/collecting path.
+    # Deferred into the stage lambdas so a store-backed resume that skips
+    # all stages never pays it.
     _hoist: dict = {}
 
     def _gaz_rows() -> list | None:
-        """Collected (surface_form, entity_id, entity_type, _norm_ok) rows,
-        or None when the gazetteer exceeds CANON_LOCAL_THRESHOLD."""
+        """Collected (surface_form, entity_id, entity_type) rows, or None
+        when the gazetteer exceeds CANON_LOCAL_THRESHOLD."""
         if "rows" not in _hoist:
             rows = (
-                gazetteer.select(
-                    "surface_form",
-                    "entity_id",
-                    "entity_type",
-                    (norm_surface("surface_form") == F.col("surface_form")).alias(
-                        "_norm_ok"
-                    ),
-                )
+                gazetteer.select("surface_form", "entity_id", "entity_type")
                 .limit(CANON_LOCAL_THRESHOLD + 1)
                 .collect()
             )
@@ -295,15 +283,6 @@ def run_pipeline(
         if rows is None:
             return None
         return sorted({r["surface_form"] for r in rows})
-
-    def _norm_checked_safe() -> bool | None:
-        """True/False = the fused collect's verdict on the link guard's
-        exact predicate (demote iff some surface is NOT a fixed point);
-        None = gazetteer over the cap — let the guard run its own job."""
-        rows = _gaz_rows()
-        if rows is None:
-            return None
-        return not any(r["_norm_ok"] is False for r in rows)
 
     run = PipelineRun(triples=None)
     # Input fingerprint ties snapshots to input CONTENT (file names + sizes
@@ -367,19 +346,8 @@ def run_pipeline(
         in_fp,
         # Fused: the link verdict and canon map are both dictionary-sized,
         # so they compose on the broadcast side — ONE hash probe per mention
-        # row instead of two, and no norm_surface pass (extract emits
-        # mentions by exact surface-form equality; see link_mentions).
-        lambda: link_and_canonicalize(
-            ext.df,
-            gazetteer,
-            canon.df,
-            pre_normalized=(
-                True
-                if _norm_checked_safe() is None
-                else _norm_checked_safe()
-            ),
-            pre_normalized_checked=_norm_checked_safe() is not None,
-        ),
+        # row instead of two (see link_and_canonicalize).
+        lambda: link_and_canonicalize(ext.df, gazetteer, canon.df),
     )
     run.stages["link"] = lnk
     if lnk.skipped:

@@ -89,7 +89,7 @@ def incremental_kg_ingest(
 
     The extract/link/materialize stages are stateless per doc, so the batch
     operators run inside ``foreachBatch`` untouched; the triples table grows
-    append-only and dedup happens at read time (or via MERGE with Iceberg).
+    append-only and dedup happens at read time.
     Returns the StreamingQuery (caller awaits/stops)."""
     from kbgen_spark.operators.extract import make_extract_fn
     from kbgen_spark.operators.link import link_mentions

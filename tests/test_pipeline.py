@@ -235,35 +235,21 @@ def test_link_top1_prefers_exact_and_prior(spark):
 
 
 def test_fused_link_canon_equals_two_step(spark, docs, gazetteer):
-    """link_and_canonicalize(pre_normalized=True) is bit-equal to
-    apply_canon_map(link_mentions(...)) on pipeline-fed mentions — the fused
-    dictionary-side composition and the skipped norm_surface pass change the
-    plan, never the rows."""
+    """link_and_canonicalize is bit-equal to apply_canon_map(link_mentions(...))
+    on pipeline-fed mentions — the fused dictionary-side composition changes
+    the plan, never the rows."""
     from kbgen_spark.operators.link import link_and_canonicalize
     from kbgen_spark.operators.materialize import apply_canon_map
 
     mentions = extract_mentions(docs, gazetteer)
     canon = build_canon_map(gazetteer)
     two_step = apply_canon_map(link_mentions(mentions, gazetteer), canon)
-    fused = link_and_canonicalize(mentions, gazetteer, canon, pre_normalized=True)
+    fused = link_and_canonicalize(mentions, gazetteer, canon)
     cols = two_step.columns
     assert fused.columns == cols
     a = sorted(tuple(r) for r in two_step.collect())
     b = sorted(tuple(r) for r in fused.collect())
     assert a == b and len(a) > 0
-
-
-def test_gazetteer_surfaces_are_norm_fixed_points(spark, gazetteer):
-    """The pre_normalized link fast path assumes mentions (== surface forms,
-    by extract's exact-equality match) probe the same verdict row that
-    norm_surface(mention) would — guaranteed when every surface form is a
-    fixed point of norm_surface. Pin it for the fixture gazetteer."""
-    from kbgen_spark.functions.text import norm_surface
-
-    drift = gazetteer.filter(
-        norm_surface("surface_form") != F.col("surface_form")
-    ).count()
-    assert drift == 0
 
 
 def test_unmatched_mentions_dropped(spark):
@@ -409,32 +395,60 @@ def test_run_pipeline_does_not_scan_docs_before_extract(spark, docs, gazetteer, 
     assert list(run.stages) == ["extract"]
 
 
-def test_pre_normalized_guard_demotes_on_drifting_gazetteer(spark):
-    """ADVICE r4: pre_normalized=True with a caller-supplied gazetteer whose
-    surfaces are NOT norm_surface fixed points must fall back to the
-    normalized probe — identical rows to pre_normalized=False — instead of
-    silently changing link semantics."""
-    from kbgen_spark.operators.link import link_and_canonicalize, link_mentions
+def test_link_drifting_gazetteer_matches_golden(spark):
+    """Normalization resolves on the dictionary side: for a gazetteer whose
+    surfaces are NOT all norm_surface fixed points, probing the raw mention
+    links exactly as the normalized golden reference does. Covers a surface
+    whose norm is another surface ('Scan!' → 'scan'), one whose norm is no
+    surface ('Node?'), duplicate surface rows (prior tie → entity_id asc),
+    and a higher-prior non-fixed-point row that must not win. The verdict
+    costs one shuffle of the gazetteer."""
+    from kbgen_spark.operators.link import link_and_canonicalize, link_verdicts
+    from kbgen_spark.operators.materialize import apply_canon_map
 
     gaz = spark.createDataFrame(
-        [("Scan!", "E1", "thing", 0.9)],  # norm_surface('Scan!') = 'scan'
+        [
+            ("scan", "E2", "thing", 0.8),
+            ("scan", "E1", "action", 0.8),
+            ("Scan!", "E9", "system", 0.99),
+            ("Node?", "E5", "thing", 0.7),
+            ("edge", "E3", "thing", 0.6),
+            ("edge", "E4", "action", 0.4),
+        ],
         "surface_form string, entity_id string, entity_type string, prior double",
     )
     mentions = spark.createDataFrame(
-        [("d1", 0, 0, "Scan!", 0)],
+        [
+            ("d1", 0, 0, "scan", 0),
+            ("d1", 0, 5, "Scan!", 1),
+            ("d1", 1, 0, "Node?", 0),
+            ("d2", 0, 0, "Scan!", 0),
+            ("d2", 0, 6, "edge", 1),
+        ],
         "doc_id string, span_idx int, offset int, mention string, tok_start int",
     )
-    fast = link_mentions(mentions, gaz, pre_normalized=True).collect()
-    slow = link_mentions(mentions, gaz, pre_normalized=False).collect()
-    assert sorted(map(tuple, fast)) == sorted(map(tuple, slow))
     canon = spark.createDataFrame(
-        [("E1", "E1", "thing")], "entity_id string, canon_id string, canon_type string"
+        [("E1", "E3", "thing")], "entity_id string, canon_id string, canon_type string"
     )
-    fused_fast = link_and_canonicalize(mentions, gaz, canon, pre_normalized=True)
-    fused_slow = link_and_canonicalize(mentions, gaz, canon, pre_normalized=False)
-    assert sorted(map(tuple, fused_fast.collect())) == sorted(
-        map(tuple, fused_slow.collect())
-    )
+
+    ref = G.links_golden(mentions.toPandas(), gaz.toPandas())
+    cols = link_mentions(mentions, gaz).columns
+    want = sorted(ref[cols].itertuples(index=False, name=None))
+    assert [(r[0], r[1], r[6]) for r in want] == [
+        ("d1", 0, "E1"),
+        ("d1", 0, "E1"),
+        ("d2", 0, "E1"),
+        ("d2", 0, "E3"),
+    ]
+    assert sorted(map(tuple, link_mentions(mentions, gaz).collect())) == want
+
+    ref_df = spark.createDataFrame(ref[cols])
+    want_c = sorted(map(tuple, apply_canon_map(ref_df, canon).collect()))
+    got_c = sorted(map(tuple, link_and_canonicalize(mentions, gaz, canon).collect()))
+    assert got_c == want_c and len(got_c) == 4
+
+    plan = link_verdicts(gaz)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
 
 
 def test_pipeline_max_ents_per_doc_guard(spark, docs, gazetteer, patterns):
