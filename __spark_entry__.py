@@ -1086,22 +1086,13 @@ def minhash_doc_pairs(spark, sf_dir):
     recall<1 LSH miss would surface as a hash mismatch, which is exactly
     what the oracle is for.
 
-    Round 6 (guide §2.5 "one huge unsplittable file → repartition
-    immediately after the read"): the sandbox documents table is ONE
-    parquet row group, so the shingle fan-out's persist job — the
-    operator's dominant cost — serialized every doc's tokenize + shingle
-    work behind a single scan task. Redistributing the compact raw docs
-    first (one shuffle of ~600 KB) parallelizes that section across the
-    session's shuffle partitions: 2.32 → 1.55 s (min-of-3, identical
-    output; MinHash is partition-order-independent by construction). A
-    corpus at real scale arrives in many splits and never needs this — the
-    same A/B left simhash flat and made ngram WORSE, so it is applied only
-    where measured."""
+    The documents table is one parquet row group; dedup_minhash_lsh itself
+    spreads such an under-split scan across the shuffle partitions before
+    its shingle fan-out. The same A/B left simhash flat and made ngram
+    WORSE, so only the MinHash operator does this."""
     from kbgen_spark.operators.dedup import dedup_minhash_lsh
 
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    docs = _t(spark, sf_dir, "documents").repartition(n_part)
-    out = dedup_minhash_lsh(docs, threshold=0.5)
+    out = dedup_minhash_lsh(_t(spark, sf_dir, "documents"), threshold=0.5)
     return out.select("a", "b", F.round("jaccard", 6).alias("jaccard"))
 
 

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kbgen_spark.functions.text import tokens
+from kbgen_spark.io import local_frame
 
 SPAN_SCHEMA = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 
@@ -314,13 +315,16 @@ def build_gazetteer(flat_docs: DataFrame) -> DataFrame:
 
 def build_relation_patterns(spark: SparkSession) -> DataFrame:
     """FIXTURES.md §3 — three predicates; P_co_occurs is the hot/skewed one
-    (fires for most entity pairs per doc → exercises K1/K2 salting)."""
+    (fires for most entity pairs per doc → exercises K1/K2 salting). A
+    ``LocalRelation`` (io.local_frame), so materialize's broadcasts of it
+    re-run no pickled-row RDD."""
     rows = [
         ("P_co_occurs", "thing", "action", "doc", 0, False),
         ("P_near", "action", "system", "span", 5, False),
         ("P_follows", "thing", "system", "span", 3, True),
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "pred string, subj_type string, obj_type string, scope string,"
         " max_gap int, ordered boolean",

@@ -7,6 +7,8 @@
 - S5: N-Triples sink — reference serializes an rdflib Graph
   [R generate_model.py]; here ``concat_ws`` + ``write.text``.
   (The partitioned parquet triple sink lives in operators/materialize.py.)
+- Driver rows: ``local_frame`` hands a driver-built table to Spark as an
+  Arrow ``LocalRelation``.
 """
 
 from __future__ import annotations
@@ -16,6 +18,29 @@ from pyspark.sql import functions as F
 
 # <subject> <predicate> <object-uri> .   |   <s> <p> "literal" .
 _NT_RE = r"^\s*<([^>]*)>\s+<([^>]*)>\s+(?:<([^>]*)>|\"((?:[^\"\\]|\\.)*)\")\s*\.\s*$"
+
+
+def local_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """Drop-in for ``spark.createDataFrame(rows, schema)`` on driver-built
+    tuples (``schema`` a DDL string), shipped as one Arrow table.
+
+    Under ``spark.sql.execution.arrow.localRelationThreshold`` the result
+    is a ``LocalRelation``: the optimizer folds projections over it on the
+    driver (``ConvertToLocalRelation``), collects and broadcasts of it run
+    no job, and no pickled-row RDD is re-run per consuming action. The
+    Arrow-table path does not depend on
+    ``spark.sql.execution.arrow.pyspark.enabled``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    st = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(st)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, st)
 
 
 def read_ntriples(spark: SparkSession, path: str) -> DataFrame:

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kbgen_spark.functions.hashing import det_uniform
+from kbgen_spark.io import local_frame
 
 RULE_SCHEMA = "body_pred string, head_pred string, confidence double"
 
@@ -212,7 +213,8 @@ def _apply_rule_shape(
     spark = triples.sparkSession
     n = len(shape)
     rtab = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 tuple(a[1] for a in r.body) + (r.head[1], r.confidence, r.key())
                 for r in rules

@@ -2,10 +2,11 @@
 (SURVEY.md §2.9 V3, §2.3 J5; BASELINE.json:6).
 
 Everything here is JVM-side SQL — char-shingling via ``transform``, MinHash
-via ``min(xxhash64(shingle, seed_i))`` aggregates, band bucketing via
-``xxhash64`` over signature slices.  No Python crosses the boundary, the
-whole thing is whole-stage-codegen + two hash aggregations, and it scales
-linearly in distinct surface forms.
+via ``array_min(transform(shingles, x -> xxhash64(x, seed_i)))`` per row,
+band bucketing via ``xxhash64`` over signature slices.  No Python crosses
+the boundary: signatures are one projection, the only shuffles are the
+bucket join and the pair ``distinct``, and it scales linearly in distinct
+surface forms.
 
 Pipeline:
   surface forms → char n-gram shingles → k-wide MinHash signature
@@ -34,23 +35,48 @@ def minhash_signatures(
     ngram: int = 2,
     shingle_hash=None,
 ) -> DataFrame:
-    """(col) → (col, sig array<bigint>). One explode + one groupBy with k
-    ``min`` aggregates — a single shuffle on the surface form.
+    """(col) → (col, sig array<bigint>) as one projection per row:
+    ``sig[i] = array_min(transform(char_ngrams(col), x -> h(x, i)))``.
+
+    Contract: one row per surface — callers pass distinct surfaces (the
+    canon local path a sorted set, ``similar_surface_edges`` a
+    ``.distinct()``). With no aggregate there is no shuffle, and over a
+    ``LocalRelation`` input the optimizer folds the whole projection on the
+    driver (``ConvertToLocalRelation``), so collecting it runs no job.
 
     ``shingle_hash``: callable (shingle Column, i) -> Column giving the i-th
-    hash family member; defaults to ``xxhash64(shingle, i)`` (fastest —
-    JVM-side). The md5-60-bit family (fixtures_openvocab
-    ``mirrorable_shingle_hash``) is injectable so a DuckDB oracle can replay
-    the exact signature → band → candidate chain (same seam as
-    dedup.minhash_signatures_from_sets)."""
+    hash family member; defaults to ``xxhash64(shingle, i)``, rendered as
+    one server-parsed SQL string (the k lambdas built through the DataFrame
+    API cost ~6 Py4J round trips per node). The md5-60-bit family
+    (fixtures_openvocab ``mirrorable_shingle_hash``) is injectable so a
+    DuckDB oracle can replay the exact signature → band → candidate chain
+    (same seam as dedup.minhash_signatures_from_sets)."""
+    sh = sf.select(col, char_ngrams(col, ngram).alias("__sh"))
     if shingle_hash is None:
-        shingle_hash = lambda c, i: F.xxhash64(c, F.lit(i))  # noqa: E731
-    sh = sf.select(col, F.explode(char_ngrams(col, ngram)).alias("shingle"))
-    aggs = [
-        F.min(shingle_hash(F.col("shingle"), i)).alias(f"h{i}") for i in range(k)
-    ]
-    sig = sh.groupBy(col).agg(*aggs)
-    return sig.select(col, F.array(*[f"h{i}" for i in range(k)]).alias("sig"))
+        sig = F.expr(
+            "array("
+            + ", ".join(
+                f"array_min(transform(__sh, x -> xxhash64(x, {i})))"
+                for i in range(k)
+            )
+            + ")"
+        )
+    else:
+        sig = F.array(
+            *[
+                F.array_min(F.transform("__sh", _family_member(shingle_hash, i)))
+                for i in range(k)
+            ]
+        )
+    return sh.select(col, sig.alias("sig"))
+
+
+def _family_member(shingle_hash, i: int):
+    """The one-argument lambda ``x -> shingle_hash(x, i)``. Binding ``i``
+    here matters twice: a closure over a loop variable would see its last
+    value, and a two-argument lambda given to ``F.transform`` receives the
+    element index as its second argument."""
+    return lambda x: shingle_hash(x, i)
 
 
 def lsh_candidate_pairs(

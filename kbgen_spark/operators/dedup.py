@@ -88,6 +88,28 @@ def doc_minhash_signatures(
     )
 
 
+def _spread_under_split(docs: DataFrame) -> DataFrame:
+    """``docs`` repartitioned to ``spark.sql.shuffle.partitions`` when its
+    plan is shuffle-free and has fewer partitions than that, else ``docs``.
+
+    The shingle fan-out's persist job is dedup_minhash_lsh's dominant cost.
+    One unsplittable file (the sf0.01 documents table is ONE parquet row
+    group) serializes every doc's tokenize + shingle work behind a single
+    scan task; redistributing the compact raw docs first parallelizes it
+    (2.32 → 1.55 s min-of-3 for minhash_doc_pairs on a 32-core host,
+    identical output: MinHash is partition-order-independent). A plan with
+    an exchange is already spread by its shuffle; AQE wraps exactly those
+    plans, and building their RDD would run the shuffle stages, so they are
+    left alone. A shuffle-free plan's RDD is built without running a job."""
+    n_part = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    plan = docs._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        return docs
+    if plan.execute().getNumPartitions() >= n_part:
+        return docs
+    return docs.repartition(n_part)
+
+
 def dedup_minhash_lsh(
     docs: DataFrame,
     k: int = 32,
@@ -107,10 +129,13 @@ def dedup_minhash_lsh(
     the DAG scheduler submits fan-out consumers before a lazy checkpoint has
     materialized blocks, recomputing the upstream subtree per consumer.
     materialize_fanout persists it to executor-local disk; the caller frees
-    it with release_fanouts once the result has been consumed."""
+    it with release_fanouts once the result has been consumed. An
+    under-split input is spread first (see _spread_under_split)."""
     from kbgen_spark.plans.lineage import materialize_fanout
 
-    sh = materialize_fanout(doc_shingle_sets(docs, shingle_n, text_col))
+    sh = materialize_fanout(
+        doc_shingle_sets(_spread_under_split(docs), shingle_n, text_col)
+    )
     sig = minhash_signatures_from_sets(sh, k, shingle_hash)
     cand = lsh_candidate_pairs(sig, "doc_id", k, bands)
     a = sh.select(F.col("doc_id").alias("a"), F.col("sh").alias("sh_a"))

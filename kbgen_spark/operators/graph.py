@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kbgen_spark.io import local_frame
+
 MAX_ITERS = 50
 
 
@@ -144,7 +146,8 @@ def connected_components(
 
 def _local_union_find(sym: DataFrame, vertices: DataFrame | None) -> DataFrame:
     """Driver-side union-find for small edge sets; same (id, component)
-    contract (component = min member)."""
+    contract (component = min member), typed like the edge ids and returned
+    as a ``LocalRelation``."""
     rows = sym.collect()
     parent: dict = {}
 
@@ -163,8 +166,8 @@ def _local_union_find(sym: DataFrame, vertices: DataFrame | None) -> DataFrame:
     if vertices is not None:
         nodes |= {r[0] for r in vertices.distinct().collect()}
     comp_rows = [(n, find(n) if n in parent else n) for n in sorted(nodes)]
-    spark = sym.sparkSession
-    return spark.createDataFrame(comp_rows, ["id", "component"])
+    t = sym.schema["u"].dataType.simpleString()
+    return local_frame(sym.sparkSession, comp_rows, f"id {t}, component {t}")
 
 
 def canonical_representatives(components: DataFrame) -> DataFrame:

@@ -18,7 +18,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kbgen_spark import fixtures as FX
-from kbgen_spark.operators.canonicalize import similar_surface_edges
+from kbgen_spark.io import local_frame
+from kbgen_spark.operators.canonicalize import (
+    minhash_signatures,
+    similar_surface_edges,
+)
 from kbgen_spark.operators.extract import extract_mentions
 from kbgen_spark.operators.graph import connected_components
 from kbgen_spark.operators.link import link_and_canonicalize
@@ -139,8 +143,8 @@ def _build_canon_map_local(
         if e not in m or ck < m[e]:
             m[e] = ck
     rows = [(e, cid, ct) for e, (cid, ct) in sorted(m.items())]
-    return spark.createDataFrame(
-        rows, "entity_id string, canon_id string, canon_type string"
+    return local_frame(
+        spark, rows, "entity_id string, canon_id string, canon_type string"
     )
 
 
@@ -155,9 +159,12 @@ def build_canon_map(
     (entity_id, canon_id, canon_type).
 
     Size-adaptive: a gazetteer under ``local_threshold`` rows resolves
-    driver-side (2 dictionary-sized jobs — a truncating collect and the
-    MinHash signature aggregate — instead of ~10 shuffle stages); pass 0 to
-    force the distributed path (property tests exercise both).
+    driver-side instead of in ~10 shuffle stages; pass 0 to force the
+    distributed path (property tests exercise both). The local path runs at
+    most one job, the truncating gazetteer collect, and none when
+    ``gaz_rows`` is given: the surfaces go to ``minhash_signatures`` as a
+    ``LocalRelation`` whose signature projection the optimizer folds on the
+    driver, and the returned map is a ``LocalRelation`` too.
 
     ``shingle_hash`` (forwarded to minhash_signatures) swaps the MinHash
     family; the md5-60-bit mirrorable family lets a DuckDB oracle replay the
@@ -175,8 +182,6 @@ def build_canon_map(
     more than ``local_threshold`` rows falls through to the distributed
     path."""
     if local_threshold:
-        from kbgen_spark.operators.canonicalize import minhash_signatures
-
         if gaz_rows is None:
             gaz_rows = (
                 gazetteer.select("surface_form", "entity_id", "entity_type")
@@ -187,9 +192,7 @@ def build_canon_map(
             spark = gazetteer.sparkSession
             surfaces = sorted({r["surface_form"] for r in gaz_rows})
             sig_rows = minhash_signatures(
-                spark.createDataFrame(
-                    [(s,) for s in surfaces], "surface_form string"
-                ),
+                local_frame(spark, [(s,) for s in surfaces], "surface_form string"),
                 "surface_form",
                 LSH_K,
                 shingle_hash=shingle_hash,
@@ -256,14 +259,14 @@ def run_pipeline(
     )
 
     # ONE lazily-run gazetteer collect serves both dictionary-sized plan
-    # decisions (round 6, guide §5 "the driver should do almost no data
-    # work"): the extract literal gate and canon's local-path rows each used
-    # to run their own eager driver job per pipeline call — ~0.1 s of pure
-    # job latency each, serial, every rep. The collect is capped at the
-    # canon local threshold (same truncation contract); an over-threshold
-    # gazetteer falls back to each callee's own distributed/collecting path.
-    # Deferred into the stage lambdas so a store-backed resume that skips
-    # all stages never pays it.
+    # decisions, so the driver does almost no data work: the extract
+    # literal gate and canon's local-path rows. It is the only job
+    # either stage runs at plan build — the canon local path then computes
+    # its signatures and map with no job at all (see build_canon_map). The
+    # collect is capped at the canon local threshold (same truncation
+    # contract); an over-threshold gazetteer falls back to each callee's own
+    # distributed/collecting path. Deferred into the stage lambdas so a
+    # store-backed resume that skips all stages never pays it.
     _hoist: dict = {}
 
     def _gaz_rows() -> list | None:

@@ -102,3 +102,10 @@ def test_cc_small_edges_huge_vertices_no_driver_collect(spark):
     assert rows["v04000"] == rows["v04001"] == "v04000"
     # isolated vertices map to themselves
     assert rows["v00042"] == "v00042" and rows["v04999"] == "v04999"
+
+
+def test_cc_local_path_returns_local_relation(spark):
+    e = spark.createDataFrame([("a", "b")], "src string, dst string")
+    v = spark.createDataFrame([("a",), ("z",)], "id string")
+    plan = connected_components(e, vertices=v)._jdf.queryExecution().optimizedPlan()
+    assert plan.nodeName() == "LocalRelation", plan.toString()

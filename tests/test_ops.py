@@ -49,6 +49,29 @@ def test_dedup_minhash_jaccard_is_exact(dup_docs):
     assert row["jaccard"] == 1.0
 
 
+def test_minhash_spreads_only_an_under_split_shuffle_free_input(spark):
+    """dedup_minhash_lsh repartitions a one-split scan, and leaves a
+    shuffled or already wide input alone, deciding without a job."""
+    sc = spark.sparkContext
+
+    def job_ids() -> set:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup())
+
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    narrow = spark.range(0, 100, 1, 1)
+    shuffled = spark.range(0, 100, 1, 1).repartition(2)
+    wide = spark.range(0, 100, 1, n)
+    before = job_ids()
+    spread = D._spread_under_split(narrow)
+    assert D._spread_under_split(shuffled) is shuffled
+    assert D._spread_under_split(wide) is wide
+    assert job_ids() == before
+    assert spread._jdf.queryExecution().logical().toString().startswith(
+        f"Repartition {n}, true"
+    )
+
+
 def test_dedup_simhash(dup_docs):
     pairs = {(r["a"], r["b"]) for r in D.dedup_simhash(dup_docs, max_hamming=8).collect()}
     assert (1, 2) in pairs

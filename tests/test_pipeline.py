@@ -11,7 +11,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from kbgen_spark import fixtures as FX
-from kbgen_spark.operators.canonicalize import similar_surface_edges
+from kbgen_spark.functions.text import char_ngrams
+from kbgen_spark.io import local_frame
+from kbgen_spark.operators.canonicalize import (
+    minhash_signatures,
+    similar_surface_edges,
+)
 from kbgen_spark.operators.extract import (
     detect_mentions_py,
     extract_mentions,
@@ -332,6 +337,63 @@ def test_canon_shingle_hash_threads_both_paths(spark, gazetteer):
     )
     assert [tuple(r) for r in local] == [tuple(r) for r in dist]
     assert len(local) > 0
+
+
+def _minhash_signatures_groupby(sf, col, k, ngram, shingle_hash):
+    """The explode + groupBy-min formulation minhash_signatures replaced:
+    the reference its per-row projection must equal."""
+    sh = sf.select(col, F.explode(char_ngrams(col, ngram)).alias("shingle"))
+    aggs = [F.min(shingle_hash(F.col("shingle"), i)).alias(f"h{i}") for i in range(k)]
+    return sh.groupBy(col).agg(*aggs).select(
+        col, F.array(*[f"h{i}" for i in range(k)]).alias("sig")
+    )
+
+
+@pytest.mark.parametrize("family", ["xxhash64", "mirrorable"])
+def test_minhash_signatures_equal_groupby_min(spark, family):
+    """One projection per surface gives the groupBy-min signatures bit for
+    bit, for both hash families, on empty, 1-char, repeated-bigram,
+    non-ASCII and multi-word surfaces."""
+    from kbgen_spark.fixtures_openvocab import mirrorable_shingle_hash
+
+    h = {
+        "xxhash64": lambda c, i: F.xxhash64(c, F.lit(i)),
+        "mirrorable": mirrorable_shingle_hash,
+    }[family]
+    surfaces = ["", "a", "é", "aa", "aaaa", "abab", "über", "日本語"]
+    surfaces += ["new york", "new york city", "a b c", " lead space", "tab\tsep"]
+    sf = local_frame(spark, [(x,) for x in surfaces], "surface_form string")
+    ref = _minhash_signatures_groupby(sf, "surface_form", 32, 2, h)
+    got = minhash_signatures(
+        sf, "surface_form", 32, shingle_hash=None if family == "xxhash64" else h
+    )
+    want = {r[0]: list(r[1]) for r in ref.collect()}
+    assert {r[0]: list(r[1]) for r in got.collect()} == want
+    assert len(want) == len(surfaces)
+
+
+def test_canon_local_path_runs_no_job(spark, gazetteer):
+    """With the gazetteer rows supplied, building the canon map and
+    collecting it submits no Spark job: the signature projection folds
+    into its LocalRelation on the driver."""
+    rows = gazetteer.select("surface_form", "entity_id", "entity_type").collect()
+    sc = spark.sparkContext
+    sc.setJobGroup("canon_local_no_job", "canon local path")
+    try:
+        got = build_canon_map(gazetteer, gaz_rows=rows).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup("canon_local_no_job") == []
+    assert len(got) > 0
+
+
+def test_driver_built_tables_are_local_relations(spark, gazetteer):
+    """The canon map and the relation patterns reach Spark as Arrow
+    LocalRelations, not pickled-row RDDs."""
+    for df in (build_canon_map(gazetteer), FX.build_relation_patterns(spark)):
+        plan = df._jdf.queryExecution().optimizedPlan()
+        assert plan.nodeName() == "LocalRelation", plan.toString()
 
 
 def test_e2e_matches_golden_pr_1(spark, docs, gazetteer, patterns):

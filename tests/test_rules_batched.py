@@ -86,6 +86,12 @@ def test_batched_plan_joins_scale_with_shapes_not_rules(spark):
     assert plan.count("Join ") <= 3 * 8 + 1
 
 
+def test_batched_rule_table_is_local_relation(spark):
+    t, preds = _dense_kb(spark)
+    plan = apply_horn_rules_batched(t, _rule_corpus(preds)[:3], seed=7)
+    assert "LocalRelation [__p0" in plan._jdf.queryExecution().optimizedPlan().toString()
+
+
 def test_reflexive_second_atom(spark):
     """ADVICE item: a reflexive atom in non-first body position must filter
     subj == obj (not produce duplicate-named columns)."""
