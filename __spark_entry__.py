@@ -1060,21 +1060,17 @@ def emit_emi_sample(spark, sf_dir):
 
 
 def emit_m3_rules_sample(spark, sf_dir):
-    """M3: horn rules fired over the M1 emission — the 1-atom fast path
-    (P_near ⇒ P_implied at 0.7) AND a 2-atom chain rule
-    (P_near(x,z) ∧ P_follows(z,y) ⇒ P_chain(x,y) at 0.5)."""
-    from kbgen_spark.models.rules import apply_horn_rules, apply_rules, parse_amie_rule
+    """M3: horn rules fired over the M1 emission in one apply_horn_rules
+    call — a 1-atom rule (P_near ⇒ P_implied at 0.7) AND a 2-atom chain
+    rule (P_near(x,z) ∧ P_follows(z,y) ⇒ P_chain(x,y) at 0.5)."""
+    from kbgen_spark.models.rules import apply_horn_rules, parse_amie_rule
 
     base = emit_m1_sample(spark, sf_dir)
-    rules = spark.createDataFrame(
-        [("P_near", "P_implied", 0.7)],
-        "body_pred string, head_pred string, confidence double",
-    )
-    out = apply_rules(base, rules, seed=42)
-    chain = parse_amie_rule(
-        "?x <P_near> ?z  ?z <P_follows> ?y => ?x <P_chain> ?y", 0.5
-    )
-    return apply_horn_rules(out, [chain], seed=42)
+    rules = [
+        parse_amie_rule("?x <P_near> ?y => ?x <P_implied> ?y", 0.7),
+        parse_amie_rule("?x <P_near> ?z  ?z <P_follows> ?y => ?x <P_chain> ?y", 0.5),
+    ]
+    return apply_horn_rules(base, rules, seed=42)
 
 
 def minhash_doc_pairs(spark, sf_dir):

@@ -78,5 +78,6 @@ def open_vocab_corpus(docs: DataFrame) -> DataFrame:
 def mirrorable_shingle_hash(shingle: Column, i: int) -> Column:
     """MinHash family the DuckDB oracle can replay exactly: the i-th hash of
     a shingle is md5_60bit(shingle || '#' || i). Pass as ``shingle_hash`` to
-    dedup_minhash_lsh / minhash_signatures_from_sets."""
+    dedup_minhash_lsh or build_canon_map: both reach
+    canonicalize.signature_column, the one signature builder."""
     return md5_60bit(F.concat(shingle, F.lit(f"#{i}")))

@@ -32,14 +32,3 @@ def salt_col(*cols: Column | str, buckets: int, seed: int = 0) -> Column:
     """Deterministic salt in [0, buckets) for two-phase skew handling (K1/K2)."""
     h = F.xxhash64(*[F.col(c) if isinstance(c, str) else c for c in cols], F.lit(seed))
     return F.pmod(h, F.lit(buckets)).cast("int")
-
-
-def stable_id(*cols: Column | str, seed: int = 0) -> Column:
-    """64-bit stable id for an arbitrary tuple (dictionary-encoding substitute
-    for the reference's uri→int python dicts [R kbgen/load_tensor_tools.py],
-    see SURVEY.md §2.3 J1).  Collision odds at 10^12 keys ≈ 2.7e-2 per
-    birthday bound on 64 bits — result-bearing identity paths use the string
-    itself or ``row_number`` dictionaries instead; this is for
-    salting/bucketing only.
-    """
-    return F.xxhash64(*[F.col(c) if isinstance(c, str) else c for c in cols], F.lit(seed))

@@ -145,7 +145,6 @@ def emit_synthetic(
     n: int,
     seed: int = 42,
     mode: str = "m1",
-    rules: DataFrame | None = None,
     emit_types: bool = False,
     apply_caps: bool | None = None,
 ) -> DataFrame:
@@ -153,8 +152,8 @@ def emit_synthetic(
 
     mode ∈ {m1, m2, emi}.  m2/emi apply degree caps + fact-set dedup (output
     count is ≤ n, as in kbgen's rejection sampling); override with
-    ``apply_caps=False`` to keep the raw multiset.  Pass ``rules`` (M3
-    horn-rule table) to also fire rules — see models/rules.py.
+    ``apply_caps=False`` to keep the raw multiset.  M3 horn rules fire over
+    the result with models/rules.py ``apply_horn_rules``.
     """
     if apply_caps is None:
         apply_caps = mode in ("m2", "emi")
@@ -231,11 +230,6 @@ def emit_synthetic(
         facts = facts.dropDuplicates(["subj", "pred", "obj"])
 
     out = facts.select("subj", "pred", "obj")
-
-    if rules is not None:
-        from kbgen_spark.models.rules import apply_rules
-
-        out = apply_rules(out, rules, seed=seed)
 
     if emit_types:
         used = out.select(F.col("subj").alias("entity")).unionByName(

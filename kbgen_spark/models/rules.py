@@ -11,13 +11,14 @@ Two rule shapes, covering AMIE's 1- and 2-atom horn rules:
   layout — the join key is wherever the repeated variable sits)
 
 Spark re-grounding:
-- the rule table is model-sized by nature (AMIE emits at most thousands of
-  rules), so rules are collected to the driver and compiled into one
-  DataFrame plan per rule, unioned;
-- each body atom is a filter on ``pred``; a 2-atom body is a self-join of
-  the triples on the shared variable (shuffle hash join on that column);
-- firing is a deterministic hash-uniform over the full variable binding +
-  rule identity (resumable — no rand());
+- the rule list is model-sized by nature (AMIE emits at most thousands of
+  rules); rules are grouped by variable-role shape and each shape fires
+  through ONE plan, with the predicates riding in a broadcast rule table —
+  O(shapes) joins, not O(rules);
+- the first body atom joins the facts to the rule table on ``pred``; a
+  second atom is a self-join of the facts on the shared variable;
+- firing is a deterministic hash-uniform over the head + rule identity
+  (resumable — no rand());
 - ``left_anti`` against existing facts so fired heads never duplicate
   (kbgen's "fact already exists" check, SURVEY §2.3 J7 / §2.7 U2).
 """
@@ -32,8 +33,6 @@ from pyspark.sql import functions as F
 
 from kbgen_spark.functions.hashing import det_uniform
 from kbgen_spark.io import local_frame
-
-RULE_SCHEMA = "body_pred string, head_pred string, confidence double"
 
 # one atom = (subject_var, predicate, object_var)
 Atom = tuple[str, str, str]
@@ -105,72 +104,6 @@ def parse_amie_tsv(
     return rules
 
 
-def _atom_frame(triples: DataFrame, atom: Atom) -> DataFrame:
-    """One body atom → matching rows with one column per DISTINCT variable.
-    A reflexive atom p(x, x) filters subj == obj and yields a single column
-    (duplicate-named columns would make downstream using-joins ambiguous)."""
-    sv, p, ov = atom
-    if sv == ov:
-        return triples.filter(
-            (F.col("pred") == p) & (F.col("subj") == F.col("obj"))
-        ).select(F.col("subj").alias(sv))
-    return triples.filter(F.col("pred") == p).select(
-        F.col("subj").alias(sv), F.col("obj").alias(ov)
-    )
-
-
-def _bind_body(triples: DataFrame, rule: HornRule) -> DataFrame:
-    """Evaluate the body pattern → one row per variable binding, with one
-    column per distinct variable."""
-    bound = _atom_frame(triples, rule.body[0])
-    for atom in rule.body[1:]:
-        nxt = _atom_frame(triples, atom)
-        shared = [c for c in bound.columns if c in nxt.columns]
-        if not shared:
-            raise ValueError(f"disconnected rule body: {rule.key()}")
-        bound = bound.join(nxt, shared)
-    return bound
-
-
-def apply_horn_rules(
-    triples: DataFrame, rules: list[HornRule], seed: int = 42
-) -> DataFrame:
-    """triples ∪ {head(h) : ∃ binding ⊨ body, u(h, rule) < conf}.
-
-    Head variables must appear in the body (safe rules — AMIE only emits
-    those). Firing is PER-HEAD: the hash draws on (head subj, head obj,
-    rule key), so a head derivable through k distinct intermediate bindings
-    still materializes with probability exactly = confidence — not
-    1-(1-conf)^k — matching the 1-atom fast path (apply_rules hashes subj/
-    obj/preds) and kbgen's "fact exists with prob conf" semantics [P §3.3].
-    Fired heads are deduped against the input facts (left_anti) and against
-    each other."""
-    fired_parts = []
-    for rule in rules:
-        bound = _bind_body(triples, rule)
-        hsv, hp, hov = rule.head
-        for v in (hsv, hov):
-            if v not in bound.columns:
-                raise ValueError(f"unsafe rule (head var ?{v} not in body): {rule.key()}")
-        fired_parts.append(
-            bound.filter(
-                det_uniform(hsv, hov, F.lit(rule.key()), seed=seed + 13)
-                < F.lit(rule.confidence)
-            ).select(
-                F.col(hsv).alias("subj"),
-                F.lit(hp).alias("pred"),
-                F.col(hov).alias("obj"),
-            )
-        )
-    if not fired_parts:
-        return triples
-    fired = fired_parts[0]
-    for part in fired_parts[1:]:
-        fired = fired.unionByName(part)
-    new_heads = fired.join(triples, ["subj", "pred", "obj"], "left_anti").distinct()
-    return triples.unionByName(new_heads)
-
-
 def _rule_shape(rule: HornRule) -> tuple:
     """Canonical per-slot variable ROLES for a safe horn rule: ``S``/``O`` for
     the head subject/object variable, ``J0, J1, …`` for the remaining body
@@ -178,8 +111,7 @@ def _rule_shape(rule: HornRule) -> tuple:
     differ only in predicate names + confidence, so one join plan (with the
     predicates riding in a broadcast rule table) evaluates all of them.
 
-    Raises on unsafe rules (a head variable absent from the body) — same
-    contract as apply_horn_rules."""
+    Raises on unsafe rules (a head variable absent from the body)."""
     hsv, _, hov = rule.head
     jmap: dict[str, str] = {}
 
@@ -269,17 +201,22 @@ def _apply_rule_shape(
     )
 
 
-def apply_horn_rules_batched(
+def apply_horn_rules(
     triples: DataFrame, rules: list[HornRule], seed: int = 42
 ) -> DataFrame:
-    """apply_horn_rules semantics with O(distinct shapes) joins instead of
-    O(rules): rules are grouped by variable-role shape and each group fires
-    through ONE plan against a broadcast rule table. Output is bit-identical
-    to apply_horn_rules (same per-head det_uniform draw — the ``__key``
-    column carries rule.key(), and xxhash64 of equal values is equal whether
-    they arrive as a literal or a column). Use this path when the mined rule
-    set is large; the per-rule path stays for readability and as the
-    equality oracle in tests."""
+    """triples ∪ {head(h) : ∃ binding ⊨ body, u(h, rule) < conf}.
+
+    Rules are grouped by variable-role shape (_rule_shape) and each group
+    fires through ONE plan against a broadcast rule table
+    (_apply_rule_shape), so the plan has O(distinct shapes) joins however
+    many rules AMIE mined. Head variables must appear in the body (safe
+    rules — AMIE only emits those); an unsafe rule raises.
+
+    Firing is PER-HEAD: the hash draws on (head subj, head obj, rule key),
+    so a head derivable through k distinct bindings still materializes with
+    probability exactly = confidence — not 1-(1-conf)^k — kbgen's "fact
+    exists with prob conf" semantics [P §3.3]. Fired heads are deduped
+    against the input facts (left_anti) and against each other."""
     groups: dict[tuple, list[HornRule]] = {}
     for rule in rules:
         groups.setdefault(_rule_shape(rule), []).append(rule)
@@ -291,24 +228,5 @@ def apply_horn_rules_batched(
     fired = fired_parts[0]
     for part in fired_parts[1:]:
         fired = fired.unionByName(part)
-    new_heads = fired.join(triples, ["subj", "pred", "obj"], "left_anti").distinct()
-    return triples.unionByName(new_heads)
-
-
-def apply_rules(triples: DataFrame, rules: DataFrame, seed: int = 42) -> DataFrame:
-    """Single-atom fast path over a (body_pred, head_pred, confidence)
-    DataFrame — one broadcast join for the whole rule table, no per-rule
-    plan. Kept alongside apply_horn_rules for the common AMIE majority case
-    (most mined rules are 1-atom)."""
-    fired = (
-        triples.join(
-            F.broadcast(rules), triples["pred"] == rules["body_pred"], "inner"
-        )
-        .filter(
-            det_uniform("subj", "obj", "body_pred", "head_pred", seed=seed + 13)
-            < F.col("confidence")
-        )
-        .select("subj", F.col("head_pred").alias("pred"), "obj")
-    )
     new_heads = fired.join(triples, ["subj", "pred", "obj"], "left_anti").distinct()
     return triples.unionByName(new_heads)

@@ -16,7 +16,7 @@ Pipeline:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kbgen_spark.functions.text import char_ngrams
@@ -35,40 +35,49 @@ def minhash_signatures(
     ngram: int = 2,
     shingle_hash=None,
 ) -> DataFrame:
-    """(col) → (col, sig array<bigint>) as one projection per row:
-    ``sig[i] = array_min(transform(char_ngrams(col), x -> h(x, i)))``.
+    """(col) → (col, sig array<bigint>): ``signature_column`` over each
+    surface's char n-grams, one projection per row.
 
     Contract: one row per surface — callers pass distinct surfaces (the
     canon local path a sorted set, ``similar_surface_edges`` a
     ``.distinct()``). With no aggregate there is no shuffle, and over a
     ``LocalRelation`` input the optimizer folds the whole projection on the
-    driver (``ConvertToLocalRelation``), so collecting it runs no job.
+    driver (``ConvertToLocalRelation``), so collecting it runs no job."""
+    sh = sf.select(col, char_ngrams(col, ngram).alias("__sh"))
+    return sh.select(col, signature_column("__sh", k, shingle_hash).alias("sig"))
+
+
+def signature_column(
+    shingles: str, k: int = DEFAULT_K, shingle_hash=None
+) -> Column:
+    """The k-wide MinHash signature of the shingle-array column named
+    ``shingles``, as one per-row expression:
+    ``sig[i] = array_min(transform(shingles, x -> h(x, i)))``. Canon
+    (char n-grams of a surface) and dedup (a doc's word-shingle set) both
+    build their signatures here. A null or empty array gives an all-null
+    signature; callers whose rows can have one drop them first.
 
     ``shingle_hash``: callable (shingle Column, i) -> Column giving the i-th
     hash family member; defaults to ``xxhash64(shingle, i)``, rendered as
     one server-parsed SQL string (the k lambdas built through the DataFrame
     API cost ~6 Py4J round trips per node). The md5-60-bit family
     (fixtures_openvocab ``mirrorable_shingle_hash``) is injectable so a
-    DuckDB oracle can replay the exact signature → band → candidate chain
-    (same seam as dedup.minhash_signatures_from_sets)."""
-    sh = sf.select(col, char_ngrams(col, ngram).alias("__sh"))
+    DuckDB oracle can replay the exact signature → band → candidate chain."""
     if shingle_hash is None:
-        sig = F.expr(
+        return F.expr(
             "array("
             + ", ".join(
-                f"array_min(transform(__sh, x -> xxhash64(x, {i})))"
+                f"array_min(transform({shingles}, x -> xxhash64(x, {i})))"
                 for i in range(k)
             )
             + ")"
         )
-    else:
-        sig = F.array(
-            *[
-                F.array_min(F.transform("__sh", _family_member(shingle_hash, i)))
-                for i in range(k)
-            ]
-        )
-    return sh.select(col, sig.alias("sig"))
+    return F.array(
+        *[
+            F.array_min(F.transform(shingles, _family_member(shingle_hash, i)))
+            for i in range(k)
+        ]
+    )
 
 
 def _family_member(shingle_hash, i: int):

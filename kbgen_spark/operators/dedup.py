@@ -1,19 +1,20 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Five strategies over the ``documents`` table, all DataFrame-native:
+Four strategies over the ``documents`` table, all DataFrame-native:
 
 - exact          : md5-hash groupBy — one shuffle on the hash.
 - minhash_lsh    : word-shingle MinHash → banded LSH → candidate pairs →
-                   exact-Jaccard verification (same JVM-side machinery as
-                   surface-form canonicalization, different shingling).
+                   exact-Jaccard verification (the per-row signature
+                   projection and band join of surface-form
+                   canonicalization, different shingling).
 - simhash        : 64-bit SimHash (Charikar, STOC 2002) from token hashes,
                    computed entirely with SQL array/bit expressions;
                    near-dup = small Hamming distance within band buckets.
 - ngram_jaccard  : exact token-set Jaccard via a shared-token candidate join
                    (inverted-index style: only pairs sharing ≥1 token are
                    scored — never O(n²) on disjoint docs).
-- embedding_cosine: near-dup by cosine ≥ τ over the embeddings table
-                   (delegates to operators/similarity.py primitives).
+
+Embedding near-duplicates are ``similarity.cosine_near_dup_banded``.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kbgen_spark.functions.text import tokens, word_shingles
-from kbgen_spark.operators.canonicalize import lsh_candidate_pairs
+from kbgen_spark.operators.canonicalize import lsh_candidate_pairs, signature_column
 
 
 def dedup_exact(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -55,36 +56,17 @@ def doc_shingle_sets(
 def minhash_signatures_from_sets(
     sh: DataFrame, k: int = 32, shingle_hash=None
 ) -> DataFrame:
-    """(doc_id, sig) from a shingle-set table — JVM-side min-hash aggs.
-    Duplicate shingles never change a min, so distinct sets are fine.
+    """(doc_id, sig) from a shingle-set table: canonicalize's
+    ``signature_column`` as one projection per doc — no explode, no
+    shuffle. Duplicate shingles never change a min, so distinct sets are
+    fine. A doc whose set is null or empty gets no row: its signature
+    would be all-null, and every such doc would share every band bucket.
 
-    ``shingle_hash``: callable (shingle Column, i) -> Column giving the i-th
-    hash of a shingle; defaults to ``xxhash64(shingle, i)`` (fast path). A
-    cross-engine-mirrorable md5-60-bit variant feeds the DuckDB oracle —
-    see __spark_entry__.openvocab_minhash_pairs."""
-    if shingle_hash is None:
-        shingle_hash = lambda c, i: F.xxhash64(c, F.lit(i))  # noqa: E731
-    exploded = sh.select("doc_id", F.explode("sh").alias("shingle"))
-    aggs = [
-        F.min(shingle_hash(F.col("shingle"), i)).alias(f"h{i}") for i in range(k)
-    ]
-    return (
-        exploded.groupBy("doc_id")
-        .agg(*aggs)
-        .select("doc_id", F.array(*[f"h{i}" for i in range(k)]).alias("sig"))
-    )
-
-
-def doc_minhash_signatures(
-    docs: DataFrame,
-    k: int = 32,
-    shingle_n: int = 3,
-    text_col: str = "text",
-    shingle_hash=None,
-) -> DataFrame:
-    """(doc_id, sig) — word-shingle MinHash, JVM-side min-hash aggs."""
-    return minhash_signatures_from_sets(
-        doc_shingle_sets(docs, shingle_n, text_col), k, shingle_hash
+    ``shingle_hash``: as in ``signature_column``; defaults to
+    ``xxhash64(shingle, i)``. A cross-engine-mirrorable md5-60-bit variant
+    feeds the DuckDB oracle — see __spark_entry__.openvocab_minhash_pairs."""
+    return sh.filter(F.size("sh") > 0).select(
+        "doc_id", signature_column("sh", k, shingle_hash).alias("sig")
     )
 
 
@@ -123,7 +105,7 @@ def dedup_minhash_lsh(
     verification of LSH candidates.
 
     The shingle-set table is computed ONCE and materialized eagerly, then
-    feeds both the signature aggregation and the verify join — without the
+    feeds both the signature projection and the verify join — without the
     checkpoint the corpus would be scanned + shingled twice (signatures, then
     again behind the candidate join). Eager, not lazy: the round-2 A/B showed
     the DAG scheduler submits fan-out consumers before a lazy checkpoint has
@@ -356,13 +338,3 @@ def dedup_ngram_jaccard(
         .filter(F.col("jaccard") >= threshold)
         .select("a", "b", "jaccard")
     )
-
-
-def dedup_embedding_cosine(
-    embeddings: DataFrame, threshold: float = 0.95
-) -> DataFrame:
-    """Near-dup vector pairs by cosine ≥ τ (brute force — see
-    operators/similarity.py for the LSH-bucketed scale path)."""
-    from kbgen_spark.operators.similarity import cosine_pairs
-
-    return cosine_pairs(embeddings, threshold)

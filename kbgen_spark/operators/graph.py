@@ -144,11 +144,11 @@ def connected_components(
     return comp
 
 
-def _local_union_find(sym: DataFrame, vertices: DataFrame | None) -> DataFrame:
-    """Driver-side union-find for small edge sets; same (id, component)
-    contract (component = min member), typed like the edge ids and returned
-    as a ``LocalRelation``."""
-    rows = sym.collect()
+def union_find(pairs) -> dict:
+    """Driver-side union-find over ``(a, b)`` pairs: {node: component} for
+    every node of a pair, component = min member (connected_components'
+    contract). Path-halving find, union by min root — so each root is its
+    tree's minimum and the result does not depend on pair order."""
     parent: dict = {}
 
     def find(x):
@@ -158,20 +158,21 @@ def _local_union_find(sym: DataFrame, vertices: DataFrame | None) -> DataFrame:
             x = parent[x]
         return x
 
-    for r in rows:
-        ra, rb = find(r["u"]), find(r["v"])
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    nodes = set(parent)
+    return {x: find(x) for x in parent}
+
+
+def _local_union_find(sym: DataFrame, vertices: DataFrame | None) -> DataFrame:
+    """Driver-side union-find for small edge sets; same (id, component)
+    contract (component = min member), typed like the edge ids and returned
+    as a ``LocalRelation``."""
+    comp = union_find((r["u"], r["v"]) for r in sym.collect())
+    nodes = set(comp)
     if vertices is not None:
         nodes |= {r[0] for r in vertices.distinct().collect()}
-    comp_rows = [(n, find(n) if n in parent else n) for n in sorted(nodes)]
+    comp_rows = [(n, comp.get(n, n)) for n in sorted(nodes)]
     t = sym.schema["u"].dataType.simpleString()
     return local_frame(sym.sparkSession, comp_rows, f"id {t}, component {t}")
-
-
-def canonical_representatives(components: DataFrame) -> DataFrame:
-    """G2 — component root IS the canonical representative (min id)."""
-    return components.select(
-        F.col("id").alias("member"), F.col("component").alias("canonical")
-    )

@@ -131,17 +131,3 @@ def extract_media_features(
             yield out
 
     return media.mapInPandas(run, FEATURE_SCHEMA)
-
-
-def media_stats(docs: DataFrame) -> DataFrame:
-    """Per-kind media span counts/refs — pure SQL summary of the media side."""
-    return (
-        docs.select(F.explode("spans").alias("s"))
-        .filter(F.col("s.kind") != "text")
-        .groupBy(F.col("s.kind").alias("kind"))
-        .agg(
-            F.count("*").alias("n_spans"),
-            F.countDistinct("s.media_ref").alias("n_refs"),
-        )
-        .orderBy("kind")
-    )

@@ -157,22 +157,6 @@ def ivf_topk(
     )
 
 
-def cosine_pairs(embeddings: DataFrame, threshold: float = 0.95) -> DataFrame:
-    """All pairs with cosine ≥ τ, blocked by LSH bucket (near-dup dedup).
-    Exact within-bucket scoring; pigeonhole recall is approximate — raise
-    recall by lowering nbits."""
-    e = normalize(embeddings).select("vec_id", F.col("embedding").alias("v"))
-    e = e.withColumn("bucket", hyperplane_bucket(F.col("v"), nbits=4, dim=64))
-    a = e.select(F.col("vec_id").alias("a"), F.col("v").alias("va"), "bucket")
-    b = e.select(F.col("vec_id").alias("b"), F.col("v").alias("vb"), "bucket")
-    return (
-        a.join(b, "bucket")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", F.round(_dot(F.col("va"), F.col("vb")), 6).alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
-
-
 def planted_near_dup_embeddings(
     embeddings: DataFrame, n_dups: int = 50, eps: float = 0.02
 ) -> DataFrame:

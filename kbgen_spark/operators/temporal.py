@@ -1,4 +1,4 @@
-"""J8 — as-of / range joins over event streams (SURVEY.md §2.3 J8).
+"""J8 — as-of joins over event streams (SURVEY.md §2.3 J8).
 
 Not in the reference (kbgen has no temporal model); part of this engine's
 analytics surface over the ``events`` table.
@@ -59,16 +59,4 @@ def asof_join(
             *[c for c in left.columns],
             *[F.col("_f." + c).alias(c + suffix) for c in right_cols],
         )
-    )
-
-
-def range_join_events(
-    events: DataFrame, windows: DataFrame, ts: str = "ts"
-) -> DataFrame:
-    """Events × [start, end) interval table. With a small interval table this
-    is a broadcast range join (fine); for two large sides, bucketize
-    timestamps to a common grain first so the join gets an equi key."""
-    return events.join(
-        F.broadcast(windows),
-        (F.col(ts) >= F.col("start")) & (F.col(ts) < F.col("end")),
     )

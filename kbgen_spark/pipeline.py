@@ -24,7 +24,7 @@ from kbgen_spark.operators.canonicalize import (
     similar_surface_edges,
 )
 from kbgen_spark.operators.extract import extract_mentions
-from kbgen_spark.operators.graph import connected_components
+from kbgen_spark.operators.graph import connected_components, union_find
 from kbgen_spark.operators.link import link_and_canonicalize
 from kbgen_spark.operators.materialize import assemble_triples
 from kbgen_spark.plans.lineage import (
@@ -88,7 +88,7 @@ def _build_canon_map_local(
       ordering: UTF-8 byte order preserves code-point order);
     - exact char-bigram Jaccard ≥ JACCARD_T (char_ngrams semantics: whole
       string when len < 2; |∩|/|∪| as IEEE double — identical division);
-    - union-find with min-root == connected_components' min-member contract;
+    - graph.union_find (min root) == connected_components' min-member contract;
     - canon per component / per entity via min (id, type) tuples == Spark's
       min(struct(...)) lexicographic field ordering.
     """
@@ -110,25 +110,12 @@ def _build_canon_map_local(
                 for b2 in ms[i + 1 :]:
                     cand.add((a, b2))
 
-    parent: dict = {}
+    def jaccard(a: str, b: str) -> float:
+        sa, sb = bigrams(a), bigrams(b)
+        return len(sa & sb) / len(sa | sb)
 
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b2 in cand:
-        sa, sb = bigrams(a), bigrams(b2)
-        if len(sa & sb) / len(sa | sb) >= JACCARD_T:
-            ra, rb = find(a), find(b2)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-
-    comp = {row["surface_form"]: None for row in gaz_rows}
-    for s in comp:
-        comp[s] = find(s) if s in parent else s
+    roots = union_find(pair for pair in cand if jaccard(*pair) >= JACCARD_T)
+    comp = {s: roots.get(s, s) for s in (row["surface_form"] for row in gaz_rows)}
 
     canon: dict = {}  # component -> min (entity_id, entity_type)
     for row in gaz_rows:

@@ -9,7 +9,7 @@ replicated-salt join, both deterministic (xxhash64 salts — resumable).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from kbgen_spark.functions.hashing import salt_col
@@ -33,22 +33,6 @@ def salted_count(
     salted = df.withColumn("_salt", salt_col(*salt_on, buckets=buckets))
     partial = salted.groupBy(*keys, "_salt").agg(F.count("*").alias("_pc"))
     return partial.groupBy(*keys).agg(F.sum("_pc").cast("bigint").alias(out))
-
-
-def salted_agg(
-    df: DataFrame,
-    keys: list[str],
-    salt_on: list[str],
-    partial_aggs: list[Column],
-    final_aggs: list[Column],
-    buckets: int = DEFAULT_SALT,
-) -> DataFrame:
-    """General two-phase salted aggregation for algebraic aggregates
-    (sum/count/min/max): caller supplies the partial aggregates (aliased) and
-    the matching re-aggregation over the partial columns."""
-    salted = df.withColumn("_salt", salt_col(*salt_on, buckets=buckets))
-    partial = salted.groupBy(*keys, "_salt").agg(*partial_aggs)
-    return partial.groupBy(*keys).agg(*final_aggs)
 
 
 def salted_dense_index(

@@ -88,21 +88,21 @@ def incremental_kg_ingest(
     """T5 — readStream(docs) → extract → link → materialize → append sink.
 
     The extract/link/materialize stages are stateless per doc, so the batch
-    operators run inside ``foreachBatch`` untouched; the triples table grows
-    append-only and dedup happens at read time.
+    operators run inside ``foreachBatch`` untouched — link and canon as the
+    one fused ``link_and_canonicalize`` probe run_pipeline uses; the triples
+    table grows append-only and dedup happens at read time.
     Returns the StreamingQuery (caller awaits/stops)."""
     from kbgen_spark.operators.extract import make_extract_fn
-    from kbgen_spark.operators.link import link_mentions
-    from kbgen_spark.operators.materialize import apply_canon_map, assemble_triples
+    from kbgen_spark.operators.link import link_and_canonicalize
+    from kbgen_spark.operators.materialize import assemble_triples
 
     # gazetteer-derived plan decisions (literal-cap collect, max token
     # count) resolved ONCE — not per micro-batch inside process().
     extract_fn = make_extract_fn(gazetteer)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        mentions = extract_fn(batch_df)
-        links = link_mentions(mentions, gazetteer)
-        triples = assemble_triples(apply_canon_map(links, canon_map), patterns)
+        links = link_and_canonicalize(extract_fn(batch_df), gazetteer, canon_map)
+        triples = assemble_triples(links, patterns)
         triples.write.mode("append").parquet(out_path)
 
     return (

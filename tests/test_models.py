@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from kbgen_spark.models.emit import emit_synthetic
 from kbgen_spark.models.learn import learn_emi, learn_m1, learn_m2
-from kbgen_spark.models.rules import apply_rules
+from kbgen_spark.models.rules import apply_horn_rules, parse_amie_rule
 
 
 @pytest.fixture(scope="module")
@@ -119,17 +119,15 @@ def test_rules_fire_with_confidence_and_dedup(spark):
         + [("s0", "head", "o0")],  # pre-existing head fact
         "subj string, pred string, obj string",
     )
-    rules = spark.createDataFrame(
-        [("body", "head", 0.5)], "body_pred string, head_pred string, confidence double"
-    )
-    out = apply_rules(t, rules, seed=42)
+    rules = [parse_amie_rule("?x <body> ?y => ?x <head> ?y", 0.5)]
+    out = apply_horn_rules(t, rules, seed=42)
     heads = out.filter(F.col("pred") == "head")
     n = heads.count()
     # ~50% of 1000 fire; pre-existing not duplicated
     assert 400 < n < 600
     assert heads.groupBy("subj", "pred", "obj").count().filter("count > 1").count() == 0
     # determinism
-    out2 = apply_rules(t, rules, seed=42)
+    out2 = apply_horn_rules(t, rules, seed=42)
     assert out.exceptAll(out2).count() == 0 and out2.exceptAll(out).count() == 0
 
 

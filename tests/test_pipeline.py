@@ -339,37 +339,65 @@ def test_canon_shingle_hash_threads_both_paths(spark, gazetteer):
     assert len(local) > 0
 
 
-def _minhash_signatures_groupby(sf, col, k, ngram, shingle_hash):
-    """The explode + groupBy-min formulation minhash_signatures replaced:
-    the reference its per-row projection must equal."""
-    sh = sf.select(col, F.explode(char_ngrams(col, ngram)).alias("shingle"))
+def _minhash_signatures_groupby(sh, key, k, shingle_hash):
+    """The explode + groupBy-min formulation canon and dedup both replaced:
+    (key, sh array) → (key, sig), the reference their per-row projection
+    must equal. explode gives a null or empty shingle array no row."""
+    ex = sh.select(key, F.explode("sh").alias("shingle"))
     aggs = [F.min(shingle_hash(F.col("shingle"), i)).alias(f"h{i}") for i in range(k)]
-    return sh.groupBy(col).agg(*aggs).select(
-        col, F.array(*[f"h{i}" for i in range(k)]).alias("sig")
+    return ex.groupBy(key).agg(*aggs).select(
+        key, F.array(*[f"h{i}" for i in range(k)]).alias("sig")
     )
 
 
 @pytest.mark.parametrize("family", ["xxhash64", "mirrorable"])
 def test_minhash_signatures_equal_groupby_min(spark, family):
-    """One projection per surface gives the groupBy-min signatures bit for
-    bit, for both hash families, on empty, 1-char, repeated-bigram,
-    non-ASCII and multi-word surfaces."""
+    """One projection per row gives the groupBy-min signatures bit for bit,
+    for both hash families: canon's char-bigram signatures on empty, 1-char,
+    repeated-bigram, non-ASCII and multi-word surfaces, and dedup's
+    word-shingle signatures on a 1-token doc, a repeated shingle, non-ASCII
+    text, a null-text doc and an empty set (those two get no row)."""
     from kbgen_spark.fixtures_openvocab import mirrorable_shingle_hash
+    from kbgen_spark.operators.dedup import (
+        doc_shingle_sets,
+        minhash_signatures_from_sets,
+    )
 
     h = {
         "xxhash64": lambda c, i: F.xxhash64(c, F.lit(i)),
         "mirrorable": mirrorable_shingle_hash,
     }[family]
+    injected = None if family == "xxhash64" else h
     surfaces = ["", "a", "é", "aa", "aaaa", "abab", "über", "日本語"]
     surfaces += ["new york", "new york city", "a b c", " lead space", "tab\tsep"]
     sf = local_frame(spark, [(x,) for x in surfaces], "surface_form string")
-    ref = _minhash_signatures_groupby(sf, "surface_form", 32, 2, h)
-    got = minhash_signatures(
-        sf, "surface_form", 32, shingle_hash=None if family == "xxhash64" else h
+    ref = _minhash_signatures_groupby(
+        sf.select("surface_form", char_ngrams("surface_form", 2).alias("sh")),
+        "surface_form",
+        32,
+        h,
     )
+    got = minhash_signatures(sf, "surface_form", 32, shingle_hash=injected)
     want = {r[0]: list(r[1]) for r in ref.collect()}
     assert {r[0]: list(r[1]) for r in got.collect()} == want
     assert len(want) == len(surfaces)
+
+    texts = [
+        (0, "solo"),
+        (1, "a b a b a b"),
+        (2, "über straße 日本語 テキスト über straße"),
+        (3, None),
+        (4, "the quick brown fox jumps over the lazy dog"),
+    ]
+    docs = local_frame(spark, texts, "doc_id bigint, text string")
+    sh = doc_shingle_sets(docs).unionByName(
+        local_frame(spark, [(5, [])], "doc_id bigint, sh array<string>")
+    )
+    ref = _minhash_signatures_groupby(sh, "doc_id", 32, h)
+    got = minhash_signatures_from_sets(sh, 32, shingle_hash=injected)
+    want = {r[0]: list(r[1]) for r in ref.collect()}
+    assert {r[0]: list(r[1]) for r in got.collect()} == want
+    assert sorted(want) == [0, 1, 2, 4]
 
 
 def test_canon_local_path_runs_no_job(spark, gazetteer):

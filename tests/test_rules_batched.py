@@ -1,7 +1,8 @@
-"""Round-3 coverage: shape-batched M3 rule application (VERDICT.md round-2
-item 4), per-head firing semantics and reflexive-atom handling (ADVICE
-items), type_closure convergence guard, and the resume-fingerprint override
-fix in run_pipeline."""
+"""Round-3 coverage: shape-batched M3 rule application, checked against the
+per-rule reference below (VERDICT.md round-2 item 4), per-head firing
+semantics and reflexive-atom handling (ADVICE items), type_closure
+convergence guard, and the resume-fingerprint override fix in
+run_pipeline."""
 
 from __future__ import annotations
 
@@ -9,13 +10,48 @@ import pytest
 from pyspark.sql import functions as F
 
 from kbgen_spark.functions.hashing import det_uniform
-from kbgen_spark.models.rules import (
-    apply_horn_rules,
-    apply_horn_rules_batched,
-    parse_amie_rule,
-)
+from kbgen_spark.models.rules import HornRule, apply_horn_rules, parse_amie_rule
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def _atom_frame(triples, atom):
+    """One body atom → matching rows with one column per DISTINCT variable.
+    A reflexive atom p(x, x) filters subj == obj and yields a single column
+    (duplicate-named columns would make downstream using-joins ambiguous)."""
+    sv, p, ov = atom
+    if sv == ov:
+        return triples.filter(
+            (F.col("pred") == p) & (F.col("subj") == F.col("obj"))
+        ).select(F.col("subj").alias(sv))
+    return triples.filter(F.col("pred") == p).select(
+        F.col("subj").alias(sv), F.col("obj").alias(ov)
+    )
+
+
+def reference(triples, rules: list[HornRule], seed: int = 42):
+    """The per-rule evaluator the per-shape plan replaced, kept as its
+    reference: one DataFrame plan per rule (filter per body atom, using-join
+    on shared variables), the same per-head det_uniform draw, unioned and
+    deduped against the input facts."""
+    fired = None
+    for rule in rules:
+        bound = _atom_frame(triples, rule.body[0])
+        for atom in rule.body[1:]:
+            nxt = _atom_frame(triples, atom)
+            bound = bound.join(nxt, [c for c in bound.columns if c in nxt.columns])
+        hsv, hp, hov = rule.head
+        part = bound.filter(
+            det_uniform(hsv, hov, F.lit(rule.key()), seed=seed + 13)
+            < F.lit(rule.confidence)
+        ).select(
+            F.col(hsv).alias("subj"), F.lit(hp).alias("pred"), F.col(hov).alias("obj")
+        )
+        fired = part if fired is None else fired.unionByName(part)
+    if fired is None:
+        return triples
+    new_heads = fired.join(triples, ["subj", "pred", "obj"], "left_anti").distinct()
+    return triples.unionByName(new_heads)
 
 
 def _triples(spark, rows):
@@ -62,12 +98,12 @@ def _rule_corpus(preds):
 
 def test_batched_equals_per_rule_on_100plus_rules(spark):
     """The done-criterion for round-2 item 4: >100 generated rules through
-    ONE plan per shape, output exactly equal to per-rule apply_horn_rules."""
+    ONE plan per shape, output exactly equal to the per-rule reference."""
     t, preds = _dense_kb(spark)
     rules = _rule_corpus(preds)
     assert len(rules) >= 100
-    per = {tuple(r) for r in apply_horn_rules(t, rules, seed=7).collect()}
-    bat_df = apply_horn_rules_batched(t, rules, seed=7)
+    per = {tuple(r) for r in reference(t, rules, seed=7).collect()}
+    bat_df = apply_horn_rules(t, rules, seed=7)
     assert {tuple(r) for r in bat_df.collect()} == per
 
 
@@ -78,7 +114,7 @@ def test_batched_plan_joins_scale_with_shapes_not_rules(spark):
     t, preds = _dense_kb(spark)
     rules = _rule_corpus(preds)
     plan = (
-        apply_horn_rules_batched(t, rules, seed=7)
+        apply_horn_rules(t, rules, seed=7)
         ._jdf.queryExecution()
         .optimizedPlan()
         .toString()
@@ -88,7 +124,7 @@ def test_batched_plan_joins_scale_with_shapes_not_rules(spark):
 
 def test_batched_rule_table_is_local_relation(spark):
     t, preds = _dense_kb(spark)
-    plan = apply_horn_rules_batched(t, _rule_corpus(preds)[:3], seed=7)
+    plan = apply_horn_rules(t, _rule_corpus(preds)[:3], seed=7)
     assert "LocalRelation [__p0" in plan._jdf.queryExecution().optimizedPlan().toString()
 
 
@@ -105,7 +141,7 @@ def test_reflexive_second_atom(spark):
         ],
     )
     rule = parse_amie_rule("?a <p1> ?e  ?e <self> ?e => ?a <fixed> ?e", 1.0)
-    for impl in (apply_horn_rules, apply_horn_rules_batched):
+    for impl in (reference, apply_horn_rules):
         out = {
             tuple(r)
             for r in impl(t, [rule], seed=3).collect()
@@ -146,7 +182,7 @@ def test_per_head_firing_is_one_draw_per_head(spark):
     }
     assert expected, "fixture degenerate: no head fired at conf 0.3"
     assert len(expected) < 12, "fixture degenerate: every head fired"
-    for impl in (apply_horn_rules, apply_horn_rules_batched):
+    for impl in (reference, apply_horn_rules):
         fired = {
             tuple(r)
             for r in impl(t, [rule], seed=11).collect()
@@ -159,7 +195,7 @@ def test_batched_rejects_unsafe_rule(spark):
     t, _ = _dense_kb(spark)
     bad = parse_amie_rule("?x <p1> ?z => ?x <h> ?y", 1.0)
     with pytest.raises(ValueError, match="unsafe"):
-        apply_horn_rules_batched(t, [bad], seed=1)
+        apply_horn_rules(t, [bad], seed=1)
 
 
 def test_type_closure_raises_on_truncation(spark):

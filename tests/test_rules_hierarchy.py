@@ -126,29 +126,6 @@ def test_parse_amie_tsv(spark, tmp_path):
     assert std[0].confidence == 0.6
 
 
-def test_fast_path_equals_general_path_at_conf1(spark):
-    """apply_rules (broadcast fast path) and apply_horn_rules (general
-    evaluator) must agree whenever firing is certain (confidence 1.0 — the
-    two paths use different firing-hash keys, so only the deterministic
-    case is comparable)."""
-    from kbgen_spark.models.rules import apply_horn_rules, apply_rules, parse_amie_rule
-
-    t = _triples(
-        spark, [(f"s{i}", "p1", f"o{i % 3}") for i in range(30)] + [("a", "px", "b")]
-    )
-    fast = apply_rules(
-        t,
-        spark.createDataFrame(
-            [("p1", "p2", 1.0)], "body_pred string, head_pred string, confidence double"
-        ),
-        seed=42,
-    )
-    gen = apply_horn_rules(t, [parse_amie_rule("?x <p1> ?y => ?x <p2> ?y", 1.0)], seed=42)
-    a = {(r["subj"], r["pred"], r["obj"]) for r in fast.collect()}
-    b = {(r["subj"], r["pred"], r["obj"]) for r in gen.collect()}
-    assert a == b
-
-
 # ---------------------------------------------------------------------------
 # Type-hierarchy rollup
 # ---------------------------------------------------------------------------
