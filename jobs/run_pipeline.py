@@ -6,8 +6,12 @@ to multi-executor clusters").
         --input /data/docs_sf --checkpoint /ckpt/kg --output /out/triples \
         [--replicate R]
 
-On a cluster, omit ``--master`` and let spark-submit provide it; locally the
-session factory falls back to local[$SPARK_GRAFT_CPUS].
+The job builds its own session rather than calling
+``kbgen_spark.session.get_spark``: spark-submit supplies the master and the
+cluster conf (without ``--master`` it runs ``local[*]``). The job sets what
+must not differ from the factory: the UTC session timezone, and the codegen
+cache size, a static conf that goes on the builder before the session
+exists.
 """
 
 from __future__ import annotations
@@ -31,9 +35,13 @@ def main() -> None:
     from kbgen_spark.operators.materialize import write_triples
     from kbgen_spark.pipeline import run_pipeline
     from kbgen_spark.plans.lineage import ParquetSnapshotStore
+    from kbgen_spark.session import CODEGEN_CACHE_MAX_ENTRIES
 
-    # under spark-submit a session already exists with the cluster master
-    spark = SparkSession.builder.appName("kbgen_run_pipeline").getOrCreate()
+    spark = (
+        SparkSession.builder.appName("kbgen_run_pipeline")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
+        .getOrCreate()
+    )
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     store = ParquetSnapshotStore(args.checkpoint) if args.checkpoint else None

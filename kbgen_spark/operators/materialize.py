@@ -13,10 +13,13 @@ Semantics (mirrored by the pure-pandas golden oracle in tests/golden_gen.py):
   tok_start_s < tok_start_o.
 - output is the distinct set of (subj, pred, obj).
 
-Scale notes: patterns are broadcast (tiny). The doc-scope self-join shuffles
-on doc_id only; the hot predicate (P_co_occurs fires on most pairs → skew on
-``pred``) is handled downstream with salted aggregation (plans/skew.py K1) —
-the join itself is keyed on doc_id, which is uniform, NOT on pred.
+Scale notes: patterns are broadcast (tiny). The pair joins are keyed on
+doc_id (plus span_idx and type), which is uniform, NOT on pred, so the hot
+predicate (P_co_occurs fires on most pairs) skews no join. Nothing is
+salted: the final union-distinct's partial aggregation runs map-side inside
+each join stage, so its one exchange carries near-output-sized data keyed
+on the whole (subj, pred, obj) row, and ``write_triples`` spreads a hot
+predicate over files by ``xxhash64(pred, subj)`` buckets.
 """
 
 from __future__ import annotations

@@ -7,6 +7,21 @@ is sized from the host's physical RAM so a default session starts anywhere:
 - Explicit skew-join enablement (SURVEY.md §2.12 K3).
 - Arrow enabled for pandas-UDF exchange (the only sanctioned Python boundary).
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
+- A codegen cache sized for the pipeline's working set
+  (``CODEGEN_CACHE_MAX_ENTRIES``). One cache entry is one generated class:
+  the Janino-compiled whole-stage or expression code of one distinct plan
+  fragment. One kg_batch rep generates about 90 distinct classes and its
+  set-up about 50 more, ~140 per session. Spark's default
+  (``spark.sql.codegen.cache.maxEntries`` = 100) is a Guava cache of 4 LRU
+  segments of 25 entries; a rep touches its classes in the same order every
+  time, so any segment that receives more than 25 of them misses on every
+  access. Which classes share a segment differs between sessions: after
+  two warm-up reps a timed rep still compiled 0-8 classes in one session,
+  21-24 in others and 51-54 in another, first with Janino and then with
+  the JIT, whose compiler threads ran on the same 4 cores as the task
+  threads. At 1000 entries (~7x the working set) a timed rep compiles 0-4.
+  The conf is static and sizes the JVM-wide ``CodeGenerator`` cache, so it
+  only takes effect when set before the first session of the JVM exists.
 """
 
 from __future__ import annotations
@@ -20,6 +35,8 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 # core count (BENCH/raw/jvmopts_ab_x64_r5.json). On a real cluster the same
 # flag belongs in spark.executor.extraJavaOptions.
 DEFAULT_DRIVER_JAVA_OPTS = "-XX:+UseParallelGC"
+# Generated classes the JVM-wide codegen cache keeps (module docstring).
+CODEGEN_CACHE_MAX_ENTRIES = 1000
 
 
 def _default_driver_mem_mb() -> int:
@@ -88,6 +105,7 @@ def get_spark(
         # driver-only 1-2g default.
         .config("spark.driver.memory", mem)
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
     )
     # $SPARK_GRAFT_DRIVER_JAVA_OPTS overrides; set to "" to disable. The
     # r5 A/B also favoured -Xms=Xmx + AlwaysPreTouch, but only on a 125 GB
