@@ -26,6 +26,15 @@ from pyspark.sql import functions as F
 # --------------------------------------------------------------------------
 
 
+def _session_memo(spark: SparkSession, key: tuple, build):
+    """``build()`` memoized ON the session object: the value dies with its
+    session, and a later session (maybe with the same ``id``) never sees it."""
+    memo = vars(spark).setdefault("_kbgen_memo", {})
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy scan handle per (session, path), memoized (round 6, guide §5):
     every ``spark.read.parquet`` call re-lists the path and re-reads the
@@ -36,15 +45,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     same way any application holds its table handles instead of re-opening
     them per query).
 
-    The handles live ON the session object, so they die with it and a later
-    session never sees them. The file listing is fixed at the first read:
-    a table rewritten in place needs a new session."""
-    handles = vars(spark).setdefault("_kbgen_table_handles", {})
-    key = (sf_dir, name)
-    df = handles.get(key)
-    if df is None:
-        df = handles.setdefault(key, spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-    return df
+    The file listing is fixed at the first read: a table rewritten in place
+    needs a new session."""
+    path = f"{sf_dir}/{name}.parquet"
+    return _session_memo(spark, ("table", path), lambda: spark.read.parquet(path))
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -751,20 +755,18 @@ def kg_cooccur_pairs(spark, sf_dir):
     so neither inserts its own exchange; the self-join builds a shuffled
     hash table instead of sort-merge (per-doc groups are gazetteer-bounded).
     Measured 0.99 → 0.82 s for the pair phase at sf0.1/local[32],
-    identical output. Partition count comes from the session's shuffle
-    partitions — scale-adaptive, never a local-core constant."""
+    identical output. The layout is materialize's ``partition_by_doc``
+    (the session's shuffle partitions, never a local-core constant)."""
     from kbgen_spark import fixtures as FX
+    from kbgen_spark.operators.materialize import partition_by_doc
 
     d = _t(spark, sf_dir, "documents")
     g = FX.build_gazetteer(d)
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    ents = (
+    ents = partition_by_doc(
         d.select("doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("tok"))
         .join(F.broadcast(g), F.col("tok") == g.surface_form)
         .select("doc_id", "entity_id")
-        .repartition(n_part, "doc_id")
-        .distinct()
-    )
+    ).distinct()
     a = ents.select("doc_id", F.col("entity_id").alias("e1"))
     b = ents.select("doc_id", F.col("entity_id").alias("e2")).hint("SHUFFLE_HASH")
     return (
@@ -925,21 +927,14 @@ def embedding_norms(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 
-_PIPELINE_CACHE: dict = {}
-
-
 def pipeline_triples(spark, sf_dir):
-    """Full pipeline output, memoized per sf_dir (deterministic, so caching
-    is sound): the emit/canon entries below all derive from it, and without
-    the checkpoint every downstream action would replay the whole flow."""
-    key = (id(spark), sf_dir)
-    if key not in _PIPELINE_CACHE:
-        from kbgen_spark.pipeline import run_pipeline
+    """Full pipeline output, memoized per session and sf_dir (deterministic,
+    so caching is sound): the emit/canon entries below all derive from it,
+    and without the checkpoint every action would replay the whole flow."""
+    from kbgen_spark.pipeline import run_pipeline
 
-        _PIPELINE_CACHE[key] = (
-            run_pipeline(spark, sf_dir).triples.localCheckpoint(eager=True)
-        )
-    return _PIPELINE_CACHE[key]
+    build = lambda: run_pipeline(spark, sf_dir).triples.localCheckpoint(eager=True)
+    return _session_memo(spark, ("pipeline", sf_dir), build)
 
 
 def pipeline_mentions_udf(spark, sf_dir):
@@ -957,16 +952,12 @@ def pipeline_mentions_udf(spark, sf_dir):
 
 
 def canon_components(spark, sf_dir):
-    key = (id(spark), sf_dir, "canon")
-    if key not in _PIPELINE_CACHE:
-        from kbgen_spark import fixtures as FX
-        from kbgen_spark.pipeline import build_canon_map
+    from kbgen_spark import fixtures as FX
+    from kbgen_spark.pipeline import build_canon_map
 
-        flat = FX.load_flat_documents(spark, sf_dir)
-        _PIPELINE_CACHE[key] = build_canon_map(
-            FX.build_gazetteer(flat)
-        ).localCheckpoint(eager=True)
-    return _PIPELINE_CACHE[key]
+    gaz = lambda: FX.build_gazetteer(FX.load_flat_documents(spark, sf_dir))
+    build = lambda: build_canon_map(gaz()).localCheckpoint(eager=True)
+    return _session_memo(spark, ("canon", sf_dir), build)
 
 
 def canon_map_mirror(spark, sf_dir):

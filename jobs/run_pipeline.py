@@ -8,10 +8,11 @@ to multi-executor clusters").
 
 The job builds its own session rather than calling
 ``kbgen_spark.session.get_spark``: spark-submit supplies the master and the
-cluster conf (without ``--master`` it runs ``local[*]``). The job sets what
-must not differ from the factory: the UTC session timezone, and the codegen
-cache size, a static conf that goes on the builder before the session
-exists.
+cluster conf (without ``--master`` it runs ``local[*]``). The job applies
+``kbgen_spark.session.PIPELINE_CONF``, what must not differ from the
+factory, on the builder before the session exists: the UTC session
+timezone, the co-partitioning conf the pair joins rely on, and two static
+confs, the codegen cache size and the memory page size.
 """
 
 from __future__ import annotations
@@ -35,14 +36,13 @@ def main() -> None:
     from kbgen_spark.operators.materialize import write_triples
     from kbgen_spark.pipeline import run_pipeline
     from kbgen_spark.plans.lineage import ParquetSnapshotStore
-    from kbgen_spark.session import CODEGEN_CACHE_MAX_ENTRIES
+    from kbgen_spark.session import PIPELINE_CONF
 
     spark = (
         SparkSession.builder.appName("kbgen_run_pipeline")
-        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
+        .config(map=PIPELINE_CONF)
         .getOrCreate()
     )
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     store = ParquetSnapshotStore(args.checkpoint) if args.checkpoint else None
     docs = None

@@ -26,8 +26,9 @@ def local_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:
 
     Under ``spark.sql.execution.arrow.localRelationThreshold`` the result
     is a ``LocalRelation``: the optimizer folds projections over it on the
-    driver (``ConvertToLocalRelation``), collects and broadcasts of it run
-    no job, and no pickled-row RDD is re-run per consuming action. The
+    driver (``ConvertToLocalRelation``), a collect of it runs no job, and no
+    pickled-row RDD is re-run per consuming action. A broadcast join against
+    it still runs one job, which builds the broadcast relation. The
     Arrow-table path does not depend on
     ``spark.sql.execution.arrow.pyspark.enabled``."""
     import pyarrow as pa

@@ -13,11 +13,22 @@ Semantics (mirrored by the pure-pandas golden oracle in tests/golden_gen.py):
   tok_start_s < tok_start_o.
 - output is the distinct set of (subj, pred, obj).
 
+Partitioning contract: the pair joins read ``partition_by_doc``'s layout
+(hash on ``doc_id`` into ``spark.sql.shuffle.partitions`` parts) and add no
+exchange of their own. ``run_pipeline`` persists its links in that layout,
+so ``assemble_triples``' own ``partition_by_doc`` is planned away; any
+other input (a parquet read-back, a streaming micro-batch) pays that one
+repartition, which AQE never coalesces, so the row-expanding joins keep
+that many tasks instead of the few their small input bytes suggest. A
+``doc_id``-only layout satisfies the joins' ``(doc_id, ...)`` keys only
+with ``spark.sql.requireAllClusterKeysForCoPartition=false``
+(``session.PIPELINE_CONF``).
+
 Scale notes: patterns are broadcast (tiny). The pair joins are keyed on
 doc_id (plus span_idx and type), which is uniform, NOT on pred, so the hot
 predicate (P_co_occurs fires on most pairs) skews no join. Nothing is
 salted: the final union-distinct's partial aggregation runs map-side inside
-each join stage, so its one exchange carries near-output-sized data keyed
+the join stage, so its one exchange carries near-output-sized data keyed
 on the whole (subj, pred, obj) row, and ``write_triples`` spreads a hot
 predicate over files by ``xxhash64(pred, subj)`` buckets.
 """
@@ -40,38 +51,37 @@ def apply_canon_map(links: DataFrame, canon_map: DataFrame) -> DataFrame:
     )
 
 
+def partition_by_doc(links: DataFrame) -> DataFrame:
+    """The pair joins' layout (module docstring): ``links`` hash-partitioned
+    on ``doc_id`` into ``spark.sql.shuffle.partitions`` parts."""
+    n = int(links.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return links.repartition(n, "doc_id")
+
+
 def assemble_triples(
     canon_links: DataFrame,
     patterns: DataFrame,
-    pair_partitions: int | None = None,
+    *,
     max_ents_per_doc: int | None = None,
 ) -> DataFrame:
-    """canon links × patterns → distinct (subj, pred, obj).
+    """canon links × patterns → distinct (subj, pred, obj), over
+    ``partition_by_doc(canon_links)``.
 
-    Parallelism note (measured, BENCH/BASELINE.md round 2): the per-doc pair
-    joins EXPAND their input (up to |ents/doc|² output rows per input row),
-    but their *input* is small in bytes — so AQE's partition coalescing,
-    which only sees map-output bytes, squeezes the join down to a handful of
-    tasks and the heaviest stage of the pipeline stops scaling with cores.
-    The explicit ``repartition(pair_partitions, join key)`` pins the
-    expansion's parallelism (user repartitions are exempt from AQE
-    coalescing). The branches feed ONE final union-distinct (round 6): its
-    partial aggregation runs INSIDE each branch's join stage (union is not a
-    shuffle boundary), so the single exchange already carries only
-    near-output-sized data — the per-branch ``distinct`` each branch used to
-    carry added an extra exchange + final aggregate per branch for the same
-    map-side reduction (guide §2.4; measured 1.60 s → 1.38 s for the stage
-    at ×4/local[32], output identical).
+    Each scope is one broadcast join with its patterns and one
+    ``SHUFFLE_HASH`` pair join on the shared layout: a build side holds
+    (rows / partitions), and a shuffled-hash build skips the sorts a
+    sort-merge join pays on both sides. Both scopes feed one union-distinct,
+    whose partial aggregation runs inside the join stage.
 
     ``max_ents_per_doc`` (opt-in; PLANS.md "known plan debts"): the doc-scope
     pair join is quadratic in distinct entities per doc BY SEMANTICS — fine
     while gazetteers bound it (the fixture corpus peaks at ~30), fatal if a
     pathological doc matches 10⁵ surface forms (10¹⁰ pairs from one doc, one
     straggler task). When set, one cheap aggregation over the already-distinct
-    entity list (same doc_id shuffle key the join needs anyway) fails fast
-    with the offending doc ids instead of letting the expansion run; a 100 TB
-    deployment enables it on corpus-validation runs. None (default) adds no
-    job."""
+    entity list fails fast with the offending doc ids instead of letting the
+    expansion run; a 100 TB deployment enables it on corpus-validation runs.
+    None (default) adds no job."""
+    canon_links = partition_by_doc(canon_links)
     if max_ents_per_doc is not None:
         hot = (
             canon_links.select("doc_id", "entity_c", "type_c")
@@ -90,45 +100,18 @@ def assemble_triples(
                 f"entities/doc; docs exceed max_ents_per_doc={max_ents_per_doc}: "
                 f"{worst} (top 5 shown)"
             )
-    n_part = pair_partitions or int(
-        canon_links.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
     doc_pat = patterns.filter(F.col("scope") == "doc")
     span_pat = patterns.filter(F.col("scope") == "span")
 
     # ---- doc scope: distinct entities per doc, typed pair join on doc_id.
-    # PARTITIONING PIN (round-3 correction of the round-2 pin): the planner
-    # extracts (doc_id, obj_type)=(doc_id, type_c) as the equi-join keys —
-    # the type-match condition is an equality THROUGH the broadcast pattern
-    # join — and with requireAllClusterKeysForCoPartition (default) a
-    # repartition on doc_id alone does NOT satisfy the join's distribution,
-    # so Spark inserted its own ENSURE_REQUIREMENTS exchange on
-    # (doc_id, type) right after the pin... which AQE then coalesced by its
-    # tiny input BYTES, starving the row-EXPANDING join down to 1-2 tasks
-    # again (measured: 95 s flat at 2 AND 8 cores, 320k docs). Pinning both
-    # sides on the FULL equi-key list (same order) leaves no exchange for
-    # AQE to touch: the join runs at exactly n_part tasks (re-measured:
-    # scales with cores again).
     ents = canon_links.select("doc_id", "entity_c", "type_c").distinct()
-    s = (
-        ents.alias("s")
-        .join(
-            F.broadcast(doc_pat).alias("p"),
-            F.col("s.type_c") == F.col("p.subj_type"),
-        )
-        .repartition(n_part, F.col("s.doc_id"), F.col("p.obj_type"))
+    s = ents.alias("s").join(
+        F.broadcast(doc_pat).alias("p"),
+        F.col("s.type_c") == F.col("p.subj_type"),
     )
-    # SHUFFLE_HASH on the o-side (round 6, guide §3.1): the planner picked
-    # sort-merge, paying a full sort of BOTH pinned sides before the
-    # expanding join; a shuffled-hash build skips the sorts. The build side
-    # is safe by construction — per-partition state is (rows / n_part) and
-    # n_part scales with data, and the max_ents_per_doc guard bounds the
-    # pathological-doc case. Measured 1.70 → 1.51 s (min-of-4, ×4/local[32])
-    # with a much tighter spread; output identical.
-    ents_o = ents.repartition(n_part, "doc_id", "type_c").hint("SHUFFLE_HASH")
     doc_triples = (
         s.join(
-            ents_o.alias("o"),
+            ents.hint("SHUFFLE_HASH").alias("o"),
             (F.col("s.doc_id") == F.col("o.doc_id"))
             & (F.col("p.obj_type") == F.col("o.type_c"))
             & (F.col("s.entity_c") != F.col("o.entity_c")),
@@ -141,24 +124,14 @@ def assemble_triples(
     )
 
     # ---- span scope: pair mentions within a span, gap + order constraints
-    # (same full-equi-key pin: keys are doc_id, span_idx, obj_type/type_c)
     m = canon_links.select("doc_id", "span_idx", "tok_start", "entity_c", "type_c")
-    ms = (
-        m.alias("s")
-        .join(
-            F.broadcast(span_pat).alias("p"),
-            F.col("s.type_c") == F.col("p.subj_type"),
-        )
-        .repartition(
-            n_part, F.col("s.doc_id"), F.col("s.span_idx"), F.col("p.obj_type")
-        )
-    )
-    m_o = m.repartition(n_part, "doc_id", "span_idx", "type_c").hint(
-        "SHUFFLE_HASH"
+    ms = m.alias("s").join(
+        F.broadcast(span_pat).alias("p"),
+        F.col("s.type_c") == F.col("p.subj_type"),
     )
     span_triples = (
         ms.join(
-            m_o.alias("o"),
+            m.hint("SHUFFLE_HASH").alias("o"),
             (F.col("s.doc_id") == F.col("o.doc_id"))
             & (F.col("s.span_idx") == F.col("o.span_idx"))
             & (F.col("o.type_c") == F.col("p.obj_type"))

@@ -26,7 +26,7 @@ from kbgen_spark.operators.canonicalize import (
 from kbgen_spark.operators.extract import extract_mentions
 from kbgen_spark.operators.graph import connected_components, union_find
 from kbgen_spark.operators.link import link_and_canonicalize
-from kbgen_spark.operators.materialize import assemble_triples
+from kbgen_spark.operators.materialize import assemble_triples, partition_by_doc
 from kbgen_spark.plans.lineage import (
     ParquetSnapshotStore,
     dataframe_fingerprint,
@@ -238,9 +238,10 @@ def run_pipeline(
     deployments enable it without touching operator code.
     """
     overrides = {"docs": docs, "gazetteer": gazetteer, "patterns": patterns}
-    flat = FX.load_flat_documents(spark, sf_dir)
-    docs = docs if docs is not None else FX.interleave_documents(flat)
-    gazetteer = gazetteer if gazetteer is not None else FX.build_gazetteer(flat)
+    if docs is None or gazetteer is None:
+        flat = FX.load_flat_documents(spark, sf_dir)
+        docs = docs if docs is not None else FX.interleave_documents(flat)
+        gazetteer = gazetteer if gazetteer is not None else FX.build_gazetteer(flat)
     patterns = (
         patterns if patterns is not None else FX.build_relation_patterns(spark)
     )
@@ -336,8 +337,9 @@ def run_pipeline(
         in_fp,
         # Fused: the link verdict and canon map are both dictionary-sized,
         # so they compose on the broadcast side — ONE hash probe per mention
-        # row instead of two (see link_and_canonicalize).
-        lambda: link_and_canonicalize(ext.df, gazetteer, canon.df),
+        # row instead of two (see link_and_canonicalize). The fan-out
+        # persists the pair joins' doc_id layout (operators/materialize.py).
+        lambda: partition_by_doc(link_and_canonicalize(ext.df, gazetteer, canon.df)),
     )
     run.stages["link"] = lnk
     if lnk.skipped:

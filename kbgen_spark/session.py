@@ -6,7 +6,21 @@ is sized from the host's physical RAM so a default session starts anywhere:
 - AQE on (runtime coalescing, SMJ→broadcast conversion, skew-join splitting).
 - Explicit skew-join enablement (SURVEY.md §2.12 K3).
 - Arrow enabled for pandas-UDF exchange (the only sanctioned Python boundary).
+
+``PIPELINE_CONF`` holds the confs the pipeline depends on; the spark-submit
+job (jobs/run_pipeline.py) applies the same dict:
+
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
+- Co-partitioned joins accept a partitioning on a subset of their keys
+  (``spark.sql.requireAllClusterKeysForCoPartition=false``), so the pair
+  joins reuse the links' ``doc_id`` layout (operators/materialize.py); the
+  query_suite queries execute the same plans either way.
+- 8 MB Tungsten memory pages (``spark.buffer.pageSize``, static). Each
+  hash-map operator of a task allocates at least one page, and Spark's
+  default reaches 64 MB on a 4 GB heap at 4 cores; a pair-join task runs
+  seven such operators, and young GCs promoted their pages (kg_batch peak
+  RSS ~4.5 GB at 64 MB, ~2.4 GB at 8 MB; PLANS.md). A larger map just
+  takes more pages.
 - A codegen cache sized for the pipeline's working set
   (``CODEGEN_CACHE_MAX_ENTRIES``). One cache entry is one generated class:
   the Janino-compiled whole-stage or expression code of one distinct plan
@@ -37,6 +51,13 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 DEFAULT_DRIVER_JAVA_OPTS = "-XX:+UseParallelGC"
 # Generated classes the JVM-wide codegen cache keeps (module docstring).
 CODEGEN_CACHE_MAX_ENTRIES = 1000
+# Confs the pipeline depends on (module docstring).
+PIPELINE_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_MAX_ENTRIES),
+    "spark.sql.requireAllClusterKeysForCoPartition": "false",
+    "spark.buffer.pageSize": "8m",
+}
 
 
 def _default_driver_mem_mb() -> int:
@@ -98,14 +119,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         # Nested-schema pruning: text-only stages must never read media bytes.
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
-        # Deterministic timestamp semantics vs the DuckDB oracle.
-        .config("spark.sql.session.timeZone", "UTC")
         # local mode: the driver JVM hosts every executor thread — size the
         # heap for all of them (tasks × shuffle/agg buffers), not a
         # driver-only 1-2g default.
         .config("spark.driver.memory", mem)
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
+        .config(map=PIPELINE_CONF)
     )
     # $SPARK_GRAFT_DRIVER_JAVA_OPTS overrides; set to "" to disable. The
     # r5 A/B also favoured -Xms=Xmx + AlwaysPreTouch, but only on a 125 GB

@@ -37,6 +37,32 @@ def test_table_handles_die_with_their_session():
     assert ref() is None
 
 
+def test_pipeline_frames_die_with_their_session(monkeypatch):
+    """The memoized pipeline and canon frames live on the session too: no
+    module-level cache keeps a dropped session's frames alive."""
+    import kbgen_spark.fixtures as FX
+    import kbgen_spark.pipeline as P
+
+    class _Frame:
+        def __init__(self, session):
+            self.triples = self  # a checkpointed frame references its session
+            self._session = session
+
+        def localCheckpoint(self, eager):
+            return self
+
+    monkeypatch.setattr(P, "run_pipeline", lambda spark, sf_dir: _Frame(spark))
+    monkeypatch.setattr(FX, "build_gazetteer", lambda flat: flat[0])
+    monkeypatch.setattr(P, "build_canon_map", _Frame)
+    s = _StandInSession()
+    assert E.pipeline_triples(s, SF01) is E.pipeline_triples(s, SF01)
+    assert E.canon_components(s, SF01) is E.canon_components(s, SF01)
+    ref = weakref.ref(s)
+    del s
+    gc.collect()
+    assert ref() is None
+
+
 def _plan_nodes(plan):
     yield plan
     children = plan.children()

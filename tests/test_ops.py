@@ -219,13 +219,13 @@ def test_assemble_triples_ents_per_doc_guard(spark):
         "max_gap int, ordered boolean",
     )
     out = {(r["subj"], r["pred"], r["obj"])
-           for r in assemble_triples(links, patterns, 4).collect()}
+           for r in assemble_triples(links, patterns).collect()}
     assert out == {("e1", "P_co_occurs", "e3"), ("e2", "P_co_occurs", "e3")}
     # cap above the max (3 distinct ents in d1) passes and is identical
-    ok = assemble_triples(links, patterns, 4, max_ents_per_doc=3)
+    ok = assemble_triples(links, patterns, max_ents_per_doc=3)
     assert {(r["subj"], r["pred"], r["obj"]) for r in ok.collect()} == out
     with pytest.raises(ValueError, match="d1"):
-        assemble_triples(links, patterns, 4, max_ents_per_doc=2)
+        assemble_triples(links, patterns, max_ents_per_doc=2)
 
 
 def test_scrub_pii_matches_python_re(spark):

@@ -467,6 +467,85 @@ def test_resume_output_equals_fresh_run(spark, tmp_path):
     assert triples_fingerprint(resumed.triples) == triples_fingerprint(fresh.triples)
 
 
+def _plan_nodes(plan):
+    """A physical plan's nodes, entering query stages and reused exchanges
+    but not a cached relation's own plan."""
+    yield plan
+    name = plan.nodeName()
+    if name.endswith("QueryStage"):
+        yield from _plan_nodes(plan.plan())
+    elif name == "ReusedExchange":
+        yield from _plan_nodes(plan.child())
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def _final_plan_nodes(df) -> list:
+    """Nodes of ``df``'s final AQE plan; run an action on ``df`` first."""
+    return list(_plan_nodes(df._jdf.queryExecution().executedPlan().executedPlan()))
+
+
+def test_pair_joins_reuse_the_persisted_doc_layout(spark, docs, gazetteer, patterns):
+    """With no store the link stage persists its rows laid out by doc_id,
+    and the pair joins read that layout: above the in-memory link scan the
+    final plan has one hash exchange, the final distinct's. Both pair joins
+    are shuffled-hash joins; the pattern joins broadcast."""
+    run = run_pipeline(spark, SF_DIR, docs=docs, gazetteer=gazetteer, patterns=patterns)
+    assert len(run.triples.collect()) == 432
+    nodes = _final_plan_nodes(run.triples)
+    exchanges = [
+        n.outputPartitioning().toString() for n in nodes if n.nodeName() == "Exchange"
+    ]
+    assert len(exchanges) == 1 and exchanges[0].startswith("hashpartitioning(subj#")
+    joins = sorted(n.nodeName() for n in nodes if n.nodeName().endswith("Join"))
+    assert joins == ["BroadcastHashJoin"] * 2 + ["ShuffledHashJoin"] * 2, joins
+
+
+def test_pair_joins_lay_out_read_back_links_by_doc(
+    spark, docs, gazetteer, patterns, tmp_path
+):
+    """Links read back from parquet (a store-backed run) have no layout, so
+    assemble_triples lays them out itself: every exchange under a pair join
+    is its REPARTITION_BY_NUM on doc_id, which AQE never coalesces, and
+    none is an exchange the planner inserted (ENSURE_REQUIREMENTS)."""
+    from kbgen_spark.operators.materialize import assemble_triples
+
+    path = str(tmp_path / "links")
+    run = run_pipeline(
+        spark, SF_DIR, docs=docs, gazetteer=gazetteer, patterns=patterns,
+        stop_after="link",
+    )
+    run.stages["link"].df.write.parquet(path)
+    triples = assemble_triples(spark.read.parquet(path), patterns)
+    assert len(triples.collect()) == 432
+    pair_joins = [
+        n for n in _final_plan_nodes(triples) if n.nodeName() == "ShuffledHashJoin"
+    ]
+    assert len(pair_joins) == 2
+    for join in pair_joins:
+        feeds = [
+            (n.shuffleOrigin().toString(), n.outputPartitioning().toString())
+            for side in (join.left(), join.right())
+            for n in _plan_nodes(side)
+            if n.nodeName() == "Exchange"
+        ]
+        assert feeds and all(
+            origin == "REPARTITION_BY_NUM" and part.startswith("hashpartitioning(doc_id#")
+            for origin, part in feeds
+        ), feeds
+
+
+def test_run_pipeline_reads_no_corpus_when_inputs_are_given(
+    spark, docs, gazetteer, patterns
+):
+    """With docs and gazetteer supplied, run_pipeline never opens sf_dir."""
+    run = run_pipeline(
+        spark, "/nonexistent", docs=docs, gazetteer=gazetteer, patterns=patterns
+    )
+    assert triples_fingerprint(run.triples) == "432:3272129491746201518"
+
+
 def test_run_pipeline_does_not_scan_docs_before_extract(spark, docs, gazetteer, patterns):
     """Building the extract stage runs no job over the corpus: any scan of
     these docs raises."""

@@ -21,6 +21,11 @@ def test_default_driver_heap_fits_host_and_is_not_pretouched():
     assert "AlwaysPreTouch" not in session.DEFAULT_DRIVER_JAVA_OPTS
 
 
+def test_factory_session_applies_pipeline_conf(spark):
+    for key, value in session.PIPELINE_CONF.items():
+        assert spark.conf.get(key) == value, key
+
+
 def test_warm_pipeline_rep_reuses_generated_code(spark):
     """The codegen cache holds the pipeline's working set: once the pipeline
     has run, a further rep finds its generated classes in the cache instead
