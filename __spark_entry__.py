@@ -965,9 +965,12 @@ def canon_map_mirror(spark, sf_dir):
     upgrades the rows-only canon_components check): build_canon_map over the
     full fixture gazetteer with the md5-60-bit MinHash family injected and
     the DISTRIBUTED path forced (local_threshold=0 — the LSH band self-join,
-    large/small-star connected components, and min-struct rep selection all
-    execute as Spark plans; the driver-local mirror is bit-equal by pytest
-    pin). DuckDB replays the identical chain — char-bigram shingles, 32
+    the Jaccard verify and min-struct rep selection execute as Spark plans;
+    the driver-local mirror is bit-equal by pytest pin). Connected
+    components do NOT run large/small-star rounds here: the fixture's edge
+    set is far under connected_components' own 100k-edge gate, so they
+    resolve in its driver union-find; the star rounds are covered only by
+    tests/test_graph.py. DuckDB replays the identical chain — char-bigram shingles, 32
     md5-60-bit min-hashes, 16 band-slice buckets (bucket equality IS slice
     equality; the xxhash64 bucket code Spark uses is only an equi-join key),
     candidate pairs, exact bigram-Jaccard >= 0.5 verify — then resolves

@@ -8,7 +8,9 @@
   [R generate_model.py]; here ``concat_ws`` + ``write.text``.
   (The partitioned parquet triple sink lives in operators/materialize.py.)
 - Driver rows: ``local_frame`` hands a driver-built table to Spark as an
-  Arrow ``LocalRelation``.
+  Arrow ``LocalRelation``; ``dictionary_rows`` is the one read of the
+  gazetteer to the driver, which every dictionary-sized plan decision
+  (extract formulation, canon local path) takes its rows from.
 """
 
 from __future__ import annotations
@@ -18,6 +20,10 @@ from pyspark.sql import functions as F
 
 # <subject> <predicate> <object-uri> .   |   <s> <p> "literal" .
 _NT_RE = r"^\s*<([^>]*)>\s+<([^>]*)>\s+(?:<([^>]*)>|\"((?:[^\"\\]|\\.)*)\")\s*\.\s*$"
+
+# The largest gazetteer (in rows) that is read whole to the driver. Above
+# it every dictionary-sized decision takes its distributed formulation.
+DICTIONARY_MAX_ROWS = 100_000
 
 
 def local_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:
@@ -42,6 +48,24 @@ def local_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
     )
     return spark.createDataFrame(table, st)
+
+
+def dictionary_rows(gazetteer: DataFrame) -> list | None:
+    """Every column of every gazetteer row, read to the driver by one
+    truncating collect; ``None`` when the gazetteer has more than
+    ``DICTIONARY_MAX_ROWS`` rows.
+
+    The result is kept on the gazetteer DataFrame object (as
+    ``__spark_entry__._session_memo`` keeps values on the session) and dies
+    with it; later calls on that object run no job. So a changed
+    dictionary must be a new DataFrame."""
+    memo = vars(gazetteer)
+    if "_kbgen_dictionary_rows" not in memo:
+        rows = gazetteer.limit(DICTIONARY_MAX_ROWS + 1).collect()
+        memo["_kbgen_dictionary_rows"] = (
+            rows if len(rows) <= DICTIONARY_MAX_ROWS else None
+        )
+    return memo["_kbgen_dictionary_rows"]
 
 
 def read_ntriples(spark: SparkSession, path: str) -> DataFrame:

@@ -23,7 +23,8 @@ pure-python reference ``detect_mentions_py``):
   distance tries, context models).
 
 The literal/sparse choice is made in ONE place (_resolve_extract), from the
-distinct-surface count; extract_mentions and make_extract_fn both call it.
+surfaces of the gazetteer's one driver read (io.dictionary_rows);
+extract_mentions and make_extract_fn both call it.
 
 Semantics (mirrored by tests/golden_gen.py and the kg_mentions_* DuckDB
 oracles): greedy longest-match scan over whitespace tokens; phrases up to
@@ -41,6 +42,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+
+from kbgen_spark.io import dictionary_rows
 
 MENTION_ARRAY_T = "array<struct<mention:string,tok_start:int>>"
 MENTIONS_ACC_T = MENTION_ARRAY_T
@@ -220,10 +223,26 @@ ANCHOR_LITERAL_MAX = 512
 _CAND_STRUCT_T = "array<struct<pos:int,nl:int,mention:string>>"
 
 
+def _sparse_plan(gazetteer: DataFrame, k: int | None = None) -> tuple:
+    """The sparse formulation's dictionary-sized decisions, ``(k, anchor
+    rows)``: k derives with ``max_surface_tokens`` unless given, and the
+    anchor rows (first token → max surface length) are ``None`` when the
+    broadcast anchor join applies. At most two small jobs, run at plan
+    build unless the caller passes the result (_resolve_extract does)."""
+    if k is None:
+        k = max_surface_tokens(gazetteer)
+    if k >= 2 and ANCHOR_LITERAL_MAX:
+        gfirst = _split_gazetteer(gazetteer)[2]
+        arows = gfirst.limit(ANCHOR_LITERAL_MAX + 1).collect()
+        if len(arows) <= ANCHOR_LITERAL_MAX:
+            return k, arows
+    return k, None
+
+
 def candidate_mentions(
     docs: DataFrame,
     gazetteer: DataFrame,
-    k: int | None = None,
+    plan: tuple | None = None,
 ) -> DataFrame:
     """Every position where a gazetteer surface matches:
     ``(doc_id, span_idx, offset, pos, nl, mention)`` with nl = −token_count
@@ -239,14 +258,11 @@ def candidate_mentions(
     (no join, no per-token state; 24.0 s); above the cap each token row
     carries its next k−1 tokens through a broadcast anchor join (37.7 s —
     still beats flat per-length gram generation at every position, 43.0 s,
-    which was also tried and rejected)."""
+    which was also tried and rejected). ``plan``: see _sparse_plan."""
     g1, gm, gfirst = _split_gazetteer(gazetteer)
-    if k is None:
-        k = max_surface_tokens(gazetteer)
-    if k >= 2 and ANCHOR_LITERAL_MAX:
-        arows = gfirst.limit(ANCHOR_LITERAL_MAX + 1).collect()
-        if len(arows) <= ANCHOR_LITERAL_MAX:
-            return _candidate_mentions_literal(docs, g1, gm, arows)
+    k, arows = plan or _sparse_plan(gazetteer)
+    if arows is not None:
+        return _candidate_mentions_literal(docs, g1, gm, arows)
     tok = _token_stream(docs, k)
     uni = tok.join(F.broadcast(g1), tok["tok"] == F.col("_sf1")).select(
         "doc_id",
@@ -432,9 +448,13 @@ def _greedy_fold_select(cands: DataFrame) -> DataFrame:
 EXTRACT_LITERAL_MAX_SURFACES = 1024
 
 
-def extract_mentions_sql_literal(
-    docs: DataFrame, gazetteer: DataFrame, surfaces: list | None = None
-) -> DataFrame:
+def _dictionary_surfaces(gazetteer: DataFrame) -> list | None:
+    """Sorted distinct surfaces of ``io.dictionary_rows`` (None over cap)."""
+    rows = dictionary_rows(gazetteer)
+    return None if rows is None else sorted({r["surface_form"] for r in rows})
+
+
+def extract_mentions_sql_literal(docs: DataFrame, gazetteer: DataFrame) -> DataFrame:
     """Fully ARRAY-SIDE greedy mention detection for dictionary-small
     gazetteers — the whole gazetteer rides into the plan as literal InSet
     probes, so extract is ONE narrow projection: tokenize → per-position
@@ -446,20 +466,13 @@ def extract_mentions_sql_literal(
     one shape the 100 TB regime (and this VM's allocation-hostile 8-thread
     profile) scales perfectly.
 
-    Same size-adaptive family as the driver-local canon path: the literal
-    set is capped (EXTRACT_LITERAL_MAX_SURFACES) whether the caller passes
-    ``surfaces`` or the gazetteer is collected here; above the cap
+    Same size-adaptive family as the driver-local canon path: the surfaces
+    come from the gazetteer's one driver read (io.dictionary_rows), and the
+    literal set is capped (EXTRACT_LITERAL_MAX_SURFACES); above the cap
     _resolve_extract picks the sparse broadcast-join formulation. Bit-equal
     to sparse / UDF (test-pinned)."""
-    if surfaces is None:
-        rows = (
-            gazetteer.select("surface_form")
-            .distinct()
-            .limit(EXTRACT_LITERAL_MAX_SURFACES + 1)
-            .collect()
-        )
-        surfaces = [r[0] for r in rows]
-    if len(surfaces) > EXTRACT_LITERAL_MAX_SURFACES:
+    surfaces = _dictionary_surfaces(gazetteer)
+    if surfaces is None or len(surfaces) > EXTRACT_LITERAL_MAX_SURFACES:
         raise ValueError(
             "extract_mentions_sql_literal: gazetteer surfaces exceed "
             f"{EXTRACT_LITERAL_MAX_SURFACES} — use extract_mentions_sql_sparse"
@@ -535,7 +548,7 @@ def extract_mentions_sql_literal(
 
 
 def extract_mentions_sql_sparse(
-    docs: DataFrame, gazetteer: DataFrame, k: int | None = None
+    docs: DataFrame, gazetteer: DataFrame, plan: tuple | None = None
 ) -> DataFrame:
     """Sparse decomposition of the greedy scan — bit-equal to the literal
     plan and detect_mentions_py for ANY k (test-pinned; same decomposition
@@ -558,10 +571,11 @@ def extract_mentions_sql_sparse(
     candidates materializes a per-span collect_list of almost every token,
     while multi-token candidates are SPARSE (phrase anchors only) — the fold
     arrays shrink by the uni:multi candidate ratio and the dense unigram
-    stream goes through flat hash joins instead."""
-    if k is None:
-        k = max_surface_tokens(gazetteer)
-    cands = candidate_mentions(docs, gazetteer, k)
+    stream goes through flat hash joins instead. ``plan``: see
+    _sparse_plan."""
+    plan = plan or _sparse_plan(gazetteer)
+    k = plan[0]
+    cands = candidate_mentions(docs, gazetteer, plan)
     uni = cands.filter(F.col("nl") == -1)
     if k <= 1:
         return uni.select(
@@ -601,36 +615,23 @@ def extract_mentions_sql_sparse(
     return fired.unionByName(uni_fired)
 
 
-def _resolve_extract(gazetteer: DataFrame, surfaces: list | None = None):
-    """The one literal-vs-sparse decision, resolved from the distinct-surface
-    count; returns ``docs -> mentions``.
+def _resolve_extract(gazetteer: DataFrame):
+    """The one literal-vs-sparse decision, resolved from the distinct
+    surfaces of the gazetteer's one driver read (io.dictionary_rows);
+    returns ``docs -> mentions``.
 
-    With ``surfaces`` (the distinct surface list) supplied, no Spark job
-    runs. Otherwise one truncating dictionary-sized collect decides, plus
-    ``max_surface_tokens`` only when the gazetteer is over the literal cap.
-    The returned function builds its plan with no further eager work."""
-    if surfaces is None:
-        rows = (
-            gazetteer.select("surface_form")
-            .distinct()
-            .limit(EXTRACT_LITERAL_MAX_SURFACES + 1)
-            .collect()
-        )
-        if len(rows) > EXTRACT_LITERAL_MAX_SURFACES:
-            k = max_surface_tokens(gazetteer)
-            return lambda docs: extract_mentions_sql_sparse(docs, gazetteer, k=k)
-        surfaces = [r[0] for r in rows]
-    if len(surfaces) <= EXTRACT_LITERAL_MAX_SURFACES:
-        return lambda docs: extract_mentions_sql_literal(docs, gazetteer, surfaces)
-    k = max(s.count(" ") + 1 for s in surfaces)
-    return lambda docs: extract_mentions_sql_sparse(docs, gazetteer, k=k)
+    The sparse plan's decisions are resolved here too, so the returned
+    function builds its plan with no Spark job."""
+    surfaces = _dictionary_surfaces(gazetteer)
+    if surfaces is not None and len(surfaces) <= EXTRACT_LITERAL_MAX_SURFACES:
+        return lambda docs: extract_mentions_sql_literal(docs, gazetteer)
+    k = None if surfaces is None else max(s.count(" ") + 1 for s in surfaces)
+    plan = _sparse_plan(gazetteer, k)
+    return lambda docs: extract_mentions_sql_sparse(docs, gazetteer, plan)
 
 
 def extract_mentions(
-    docs: DataFrame,
-    gazetteer: DataFrame,
-    use_udf: bool = False,
-    surfaces: list | None = None,
+    docs: DataFrame, gazetteer: DataFrame, use_udf: bool = False
 ) -> DataFrame:
     """docs × gazetteer → mentions(doc_id, span_idx, offset, mention,
     tok_start).
@@ -639,29 +640,25 @@ def extract_mentions(
     (_resolve_extract): the whole-gazetteer-literal plan (zero join/shuffle)
     at ≤ EXTRACT_LITERAL_MAX_SURFACES, the sparse greedy decomposition
     above. Both are bit-equal, so the choice is a plan decision, never a
-    semantics one. Callers in per-batch loops hoist the decision with
-    ``make_extract_fn``.
-
-    ``surfaces``: the DISTINCT surface-form list, when the caller already
-    holds it — run_pipeline collects the dictionary-sized gazetteer ONCE per
-    call and feeds every consumer, so building this plan runs no Spark job
-    (the truncating collect and ``max_surface_tokens`` are skipped; k
-    derives from the list in Python). Ignored by the UDF path.
+    semantics one. The gazetteer's driver read is kept on its DataFrame
+    (io.dictionary_rows), so only the first call on a gazetteer runs a job
+    for the literal decision. Callers in per-batch loops hoist the whole
+    decision with ``make_extract_fn``.
 
     ``use_udf=True`` selects the Iterator-pandas-UDF trie scan: the
-    gazetteer is collected to the driver (dictionary table ≪ corpus,
-    enforced by GAZETTEER_MAX_SURFACES) and ``sc.broadcast`` to executors.
+    distinct surfaces are collected to the driver (dictionary table ≪
+    corpus; more than GAZETTEER_MAX_SURFACES fails fast) and
+    ``sc.broadcast`` to executors.
     All paths are bit-identical on exact matching (pinned by tests); the
     UDF seam exists for fuzzy extensions."""
     if use_udf:
-        surface_forms = [
-            r[0] for r in gazetteer.select("surface_form").distinct().collect()
-        ]
+        sf = gazetteer.select("surface_form").distinct()
+        surface_forms = [r[0] for r in sf.limit(GAZETTEER_MAX_SURFACES + 1).collect()]
         if len(surface_forms) > GAZETTEER_MAX_SURFACES:
             raise ValueError(
-                f"gazetteer has {len(surface_forms)} surface forms — exceeds the "
-                f"driver-collect cap of {GAZETTEER_MAX_SURFACES}; a gazetteer this "
-                "large must be joined distributively, not broadcast"
+                f"gazetteer has more than {GAZETTEER_MAX_SURFACES} surface forms "
+                "— the driver-collect cap; a gazetteer this large must be "
+                "joined distributively, not broadcast"
             )
         bc = docs.sparkSession.sparkContext.broadcast(surface_forms)
         udf = make_mention_udf(bc)
@@ -682,19 +679,13 @@ def extract_mentions(
                 F.col("mention_s.tok_start").alias("tok_start"),
             )
         )
-    return _resolve_extract(gazetteer, surfaces)(docs)
+    return _resolve_extract(gazetteer)(docs)
 
 
 def make_extract_fn(gazetteer: DataFrame):
-    """Hoist extract_mentions' gazetteer-derived plan decision out of a
-    per-batch loop.
-
-    Without pre-collected surfaces, extract_mentions runs one or two eager
-    dictionary-sized Spark jobs at PLAN-BUILD time (the truncating
-    literal-cap collect, and ``max_surface_tokens`` when over the cap).
-    That is fine for a one-shot batch query, but inside ``foreachBatch``
-    (incremental_kg_ingest) it would re-run per micro-batch — fixed driver
-    work that dominates small-batch latency. This resolves the decision
-    ONCE for a gazetteer that is stable across batches and returns
-    ``docs -> mentions`` building the same plan with no eager work."""
+    """Hoist extract_mentions' gazetteer-derived plan decisions out of a
+    per-batch loop: above the literal cap extract_mentions resolves the
+    sparse plan's decisions (Spark jobs) on every call, which inside
+    ``foreachBatch`` (incremental_kg_ingest) would re-run per micro-batch.
+    Returns ``docs -> mentions`` building the same plan with no Spark job."""
     return _resolve_extract(gazetteer)

@@ -5,6 +5,10 @@ Each stage checkpoints through the snapshot store (plans/lineage.py) with
 per-partition lineage counters; a rerun skips completed stages and replays
 bit-identically (all randomness is hash-derived).
 
+Every dictionary-sized decision (extract formulation, canon local path)
+takes its rows from one driver read of the gazetteer,
+``io.dictionary_rows``, which the extract stage makes.
+
 The documents table itself is never mutated — stages *derive* new tables
 keyed by (doc_id, span_idx), so the span-sequence invariant
 (kind, text, media_ref, order) holds trivially; tests assert it end-to-end.
@@ -18,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kbgen_spark import fixtures as FX
-from kbgen_spark.io import local_frame
+from kbgen_spark.io import DICTIONARY_MAX_ROWS, dictionary_rows, local_frame
 from kbgen_spark.operators.canonicalize import (
     minhash_signatures,
     similar_surface_edges,
@@ -38,13 +42,11 @@ LSH_BANDS = 16  # r = 2 rows/band: ≥99.9% recall at jaccard ≥ 0.6 (see canon
 LSH_K = 32
 JACCARD_T = 0.5
 
-# Below this many gazetteer rows the canon stage runs driver-local (same
-# size-adaptive design as connected_components.local_threshold): the
-# distributed chain is ~10 dictionary-sized shuffle stages whose cost is
-# pure scheduler/AQE latency (measured 3-5 s at local[32] for a 41-component
-# graph). The local path is bit-equal (test-pinned) and leaves the
-# distributed path untouched for corpus-scale gazetteers.
-CANON_LOCAL_THRESHOLD = 100_000
+# Canon's driver-local path builds every candidate pair of every band
+# bucket in Python. When Σ C(|bucket|, 2), counted from the bucket sizes
+# before any pair is built, is above this, canon takes the distributed
+# chain instead, which spills. Read at call time, so a test can lower it.
+CANON_LOCAL_MAX_PAIRS = 1_000_000
 
 # Per-stage code/schema version tokens, folded into each stage's params hash
 # (round-5, ADVICE r4): a semantic plan change with identical params must
@@ -75,10 +77,12 @@ class PipelineRun:
 
 
 def _build_canon_map_local(
-    spark: SparkSession, gaz_rows: list, sig_rows: list
+    spark: SparkSession, rows: list, buckets: dict
 ) -> DataFrame:
     """Driver-side mirror of the distributed canon chain, bit-equal by
-    construction (pinned by test_canon_local_equals_distributed):
+    construction (pinned by test_canon_local_equals_distributed).
+    ``buckets`` maps (band, signature slice) to its surfaces, as
+    build_canon_map groups them to count the candidate pairs:
 
     - band buckets group signatures by the EQUAL band slice (the xxhash64
       bucket code in lsh_candidate_pairs exists only to give the slice an
@@ -92,12 +96,6 @@ def _build_canon_map_local(
     - canon per component / per entity via min (id, type) tuples == Spark's
       min(struct(...)) lexicographic field ordering.
     """
-    r = LSH_K // LSH_BANDS
-    buckets: dict = {}
-    for row in sig_rows:
-        sf, sig = row["surface_form"], row["sig"]
-        for b in range(LSH_BANDS):
-            buckets.setdefault((b, tuple(sig[b * r : (b + 1) * r])), []).append(sf)
 
     def bigrams(s: str) -> set:
         return {s[i : i + 2] for i in range(len(s) - 1)} if len(s) >= 2 else {s}
@@ -115,41 +113,42 @@ def _build_canon_map_local(
         return len(sa & sb) / len(sa | sb)
 
     roots = union_find(pair for pair in cand if jaccard(*pair) >= JACCARD_T)
-    comp = {s: roots.get(s, s) for s in (row["surface_form"] for row in gaz_rows)}
+    comp = {s: roots.get(s, s) for s in (row["surface_form"] for row in rows)}
 
     canon: dict = {}  # component -> min (entity_id, entity_type)
-    for row in gaz_rows:
+    for row in rows:
         c = comp[row["surface_form"]]
         key = (row["entity_id"], row["entity_type"])
         if c not in canon or key < canon[c]:
             canon[c] = key
     m: dict = {}  # entity_id -> min (canon_id, canon_type)
-    for row in gaz_rows:
+    for row in rows:
         ck = canon[comp[row["surface_form"]]]
         e = row["entity_id"]
         if e not in m or ck < m[e]:
             m[e] = ck
-    rows = [(e, cid, ct) for e, (cid, ct) in sorted(m.items())]
+    out = [(e, cid, ct) for e, (cid, ct) in sorted(m.items())]
     return local_frame(
-        spark, rows, "entity_id string, canon_id string, canon_type string"
+        spark, out, "entity_id string, canon_id string, canon_type string"
     )
 
 
 def build_canon_map(
     gazetteer: DataFrame,
-    local_threshold: int = CANON_LOCAL_THRESHOLD,
+    local_threshold: int = DICTIONARY_MAX_ROWS,
     shingle_hash=None,
-    gaz_rows: list | None = None,
 ) -> DataFrame:
     """Surface-form similarity edges → connected components → per-component
     canonical entity (min entity_id, with its type). Returns
     (entity_id, canon_id, canon_type).
 
-    Size-adaptive: a gazetteer under ``local_threshold`` rows resolves
+    Size-adaptive: a gazetteer that ``io.dictionary_rows`` reads to the
+    driver, with at most ``local_threshold`` rows and at most
+    CANON_LOCAL_MAX_PAIRS band-bucket candidate pairs, resolves
     driver-side instead of in ~10 shuffle stages; pass 0 to force the
-    distributed path (property tests exercise both). The local path runs at
-    most one job, the truncating gazetteer collect, and none when
-    ``gaz_rows`` is given: the surfaces go to ``minhash_signatures`` as a
+    distributed path (property tests exercise both). The local path runs no
+    job once the gazetteer's rows are read (run_pipeline's extract stage
+    reads them first): the surfaces go to ``minhash_signatures`` as a
     ``LocalRelation`` whose signature projection the optimizer folds on the
     driver, and the returned map is a ``LocalRelation`` too.
 
@@ -159,32 +158,26 @@ def build_canon_map(
     components, rep selection (driver entry ``canon_map_mirror``). Both the
     local and distributed paths thread it, so the bit-equality pin between
     them holds for any family (band bucketing is slice EQUALITY semantics
-    either way).
-
-    ``gaz_rows`` (round 6): pre-collected gazetteer rows carrying
-    surface_form/entity_id/entity_type — run_pipeline collects the
-    dictionary-sized gazetteer once per call and feeds every consumer, so
-    the local path here skips its own collect job (one fewer eager driver
-    job per pipeline rep). Truncation contract matches the inline collect:
-    more than ``local_threshold`` rows falls through to the distributed
-    path."""
-    if local_threshold:
-        if gaz_rows is None:
-            gaz_rows = (
-                gazetteer.select("surface_form", "entity_id", "entity_type")
-                .limit(local_threshold + 1)
-                .collect()
-            )
-        if len(gaz_rows) <= local_threshold:
-            spark = gazetteer.sparkSession
-            surfaces = sorted({r["surface_form"] for r in gaz_rows})
-            sig_rows = minhash_signatures(
-                local_frame(spark, [(s,) for s in surfaces], "surface_form string"),
-                "surface_form",
-                LSH_K,
-                shingle_hash=shingle_hash,
-            ).collect()
-            return _build_canon_map_local(spark, gaz_rows, sig_rows)
+    either way)."""
+    rows = dictionary_rows(gazetteer) if local_threshold else None
+    if rows is not None and len(rows) <= local_threshold:
+        spark = gazetteer.sparkSession
+        surfaces = sorted({r["surface_form"] for r in rows})
+        sig_rows = minhash_signatures(
+            local_frame(spark, [(s,) for s in surfaces], "surface_form string"),
+            "surface_form",
+            LSH_K,
+            shingle_hash=shingle_hash,
+        ).collect()
+        r = LSH_K // LSH_BANDS
+        buckets: dict = {}  # (band, signature slice) -> surfaces
+        for row in sig_rows:
+            sf, sig = row["surface_form"], row["sig"]
+            for b in range(LSH_BANDS):
+                buckets.setdefault((b, tuple(sig[b * r : (b + 1) * r])), []).append(sf)
+        pairs = sum(len(m) * (len(m) - 1) // 2 for m in buckets.values())
+        if pairs <= CANON_LOCAL_MAX_PAIRS:
+            return _build_canon_map_local(spark, rows, buckets)
     edges = similar_surface_edges(
         gazetteer,
         "surface_form",
@@ -246,35 +239,6 @@ def run_pipeline(
         patterns if patterns is not None else FX.build_relation_patterns(spark)
     )
 
-    # ONE lazily-run gazetteer collect serves both dictionary-sized plan
-    # decisions, so the driver does almost no data work: the extract
-    # literal gate and canon's local-path rows. It is the only job
-    # either stage runs at plan build — the canon local path then computes
-    # its signatures and map with no job at all (see build_canon_map). The
-    # collect is capped at the canon local threshold (same truncation
-    # contract); an over-threshold gazetteer falls back to each callee's own
-    # distributed/collecting path. Deferred into the stage lambdas so a
-    # store-backed resume that skips all stages never pays it.
-    _hoist: dict = {}
-
-    def _gaz_rows() -> list | None:
-        """Collected (surface_form, entity_id, entity_type) rows, or None
-        when the gazetteer exceeds CANON_LOCAL_THRESHOLD."""
-        if "rows" not in _hoist:
-            rows = (
-                gazetteer.select("surface_form", "entity_id", "entity_type")
-                .limit(CANON_LOCAL_THRESHOLD + 1)
-                .collect()
-            )
-            _hoist["rows"] = rows if len(rows) <= CANON_LOCAL_THRESHOLD else None
-        return _hoist["rows"]
-
-    def _surfaces() -> list | None:
-        rows = _gaz_rows()
-        if rows is None:
-            return None
-        return sorted({r["surface_form"] for r in rows})
-
     run = PipelineRun(triples=None)
     # Input fingerprint ties snapshots to input CONTENT (file names + sizes
     # + mtimes), not just the path: replacing the corpus at the same path
@@ -299,7 +263,7 @@ def run_pipeline(
         "extract",
         _params("extract"),
         in_fp,
-        lambda: extract_mentions(docs, gazetteer, surfaces=_surfaces()),
+        lambda: extract_mentions(docs, gazetteer),
         fan_out=False,  # consumed only by link
     )
     run.stages["extract"] = ext
@@ -320,7 +284,7 @@ def run_pipeline(
         "canon",
         _params("canon"),
         in_fp,
-        lambda: build_canon_map(gazetteer, gaz_rows=_gaz_rows()),
+        lambda: build_canon_map(gazetteer),
         fan_out=False,  # consumed only by link's broadcast verdict build
     )
     run.stages["canon"] = canon

@@ -96,8 +96,9 @@ def incremental_kg_ingest(
     from kbgen_spark.operators.link import link_and_canonicalize
     from kbgen_spark.operators.materialize import assemble_triples
 
-    # gazetteer-derived plan decisions (literal-cap collect, max token
-    # count) resolved ONCE — not per micro-batch inside process().
+    # gazetteer-derived plan decisions (the driver read, and above the
+    # literal cap k and the anchor rows) resolved ONCE — not per
+    # micro-batch inside process().
     extract_fn = make_extract_fn(gazetteer)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:

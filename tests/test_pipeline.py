@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import random
+import uuid
 
 import golden_gen as G
 import pandas as pd
@@ -49,6 +50,19 @@ def _one_span_input(spark, surfaces, texts):
     )
     gaz = spark.createDataFrame([(s,) for s in sorted(surfaces)], "surface_form string")
     return docs, gaz
+
+
+def _job_count(spark, fn) -> int:
+    """The number of Spark jobs ``fn()`` submits."""
+    sc = spark.sparkContext
+    group = f"count_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _random_streams(seed):
@@ -143,35 +157,83 @@ def test_extract_matches_python_reference(request, spark, formulation, inp):
 
 
 def test_extract_literal_rejects_surfaces_over_cap(spark):
-    """Caller-supplied surfaces obey the literal cap too, and
-    extract_mentions takes the sparse formulation above it."""
+    """The literal formulation obeys its cap, and extract_mentions takes
+    the sparse formulation above it."""
     from kbgen_spark.operators.extract import EXTRACT_LITERAL_MAX_SURFACES
 
     surfaces = [f"w{i:04d}" for i in range(EXTRACT_LITERAL_MAX_SURFACES + 1)]
     docs, gaz = _one_span_input(spark, surfaces, ["w0001 x w1024", "w0000", ""])
     with pytest.raises(ValueError, match="exceed"):
-        extract_mentions_sql_literal(docs, gaz, surfaces)
-    out = extract_mentions(docs, gaz, surfaces=surfaces)
+        extract_mentions_sql_literal(docs, gaz)
+    out = extract_mentions(docs, gaz)
     assert "Join" in out._jdf.queryExecution().executedPlan().toString()
     assert sorted(tuple(r) for r in out.collect()) == _reference_mentions(docs, gaz)
 
 
-def test_extract_with_surfaces_runs_no_job_at_plan_build(spark, docs, gazetteer):
-    """With the distinct surfaces supplied, building the extract plan
-    submits no Spark job; without them the size decision costs one."""
-    surfaces = sorted({r["surface_form"] for r in gazetteer.collect()})
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
+def test_make_extract_fn_builds_sparse_plans_with_no_job(spark):
+    """Above the literal cap make_extract_fn resolves the sparse plan's
+    decisions (k, the anchor rows) once: building its plan runs no Spark
+    job, call after call, and each plan emits the python reference rows."""
+    from kbgen_spark.operators.extract import (
+        EXTRACT_LITERAL_MAX_SURFACES,
+        make_extract_fn,
+    )
 
-    def job_ids() -> set:
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return set(tracker.getJobIdsForGroup())
+    surfaces = [f"w{i:04d}" for i in range(EXTRACT_LITERAL_MAX_SURFACES + 1)]
+    surfaces += ["w0001 w0002", "w0003 x w0004"]
+    texts = ["w0001 w0002 w0003 x w0004", "w0003 x w0005 w0001 w0002", "x", ""]
+    docs, gaz = _one_span_input(spark, surfaces, texts)
+    extract_fn = make_extract_fn(gaz)
+    plans = []
 
-    before = job_ids()
-    extract_mentions(docs, gazetteer, surfaces=surfaces)
-    assert job_ids() == before
-    extract_mentions(docs, gazetteer)
-    assert job_ids() != before
+    def build():
+        plans.extend(extract_fn(docs) for _ in range(3))
+
+    assert _job_count(spark, build) == 0
+    exp = _reference_mentions(docs, gaz)
+    assert any(" " in r[3] for r in exp)
+    for out in plans:
+        assert "Join" in out._jdf.queryExecution().executedPlan().toString()
+        assert sorted(tuple(r) for r in out.collect()) == exp
+
+
+def test_extract_udf_rejects_surfaces_over_cap(spark, monkeypatch):
+    """The UDF path collects at most GAZETTEER_MAX_SURFACES + 1 surfaces
+    and fails fast with a named error above the cap."""
+    from kbgen_spark.operators import extract
+
+    docs, gaz = _one_span_input(spark, ["a", "b", "c"], ["a b c d", "c"])
+    monkeypatch.setattr(extract, "GAZETTEER_MAX_SURFACES", 2)
+    with pytest.raises(ValueError, match="more than 2 surface forms"):
+        extract_mentions(docs, gaz, use_udf=True)
+    monkeypatch.setattr(extract, "GAZETTEER_MAX_SURFACES", 3)
+    out = extract_mentions(docs, gaz, use_udf=True)
+    assert sorted(tuple(r) for r in out.collect()) == _reference_mentions(docs, gaz)
+
+
+def test_run_pipeline_reads_the_gazetteer_once(spark, docs, gazetteer, patterns):
+    """One driver read of the gazetteer feeds every dictionary-sized
+    decision. On a fresh gazetteer, extract plus canon run one job (the
+    read); afterwards make_extract_fn and build_canon_map on that
+    gazetteer run none."""
+    from kbgen_spark.operators.extract import make_extract_fn
+
+    gazetteer.count()  # fill the fixture's cache, so the read is one job
+    gaz = gazetteer.select("*")
+    runs = []
+
+    def extract_and_canon():
+        runs.append(
+            run_pipeline(
+                spark, SF_DIR, docs=docs, gazetteer=gaz, patterns=patterns,
+                stop_after="canon",
+            )
+        )
+
+    assert _job_count(spark, extract_and_canon) == 1
+    assert list(runs[0].stages) == ["extract", "canon"]
+    assert _job_count(spark, lambda: make_extract_fn(gaz)(docs)) == 0
+    assert _job_count(spark, lambda: build_canon_map(gaz)) == 0
 
 
 def test_extract_literal_no_shuffle_no_join(spark, docs, gazetteer):
@@ -304,7 +366,10 @@ def test_canon_map_matches_golden(spark, gazetteer):
 def test_canon_local_equals_distributed(spark, gazetteer):
     """The driver-local canon fast path (dictionary-sized gazetteers) must be
     bit-equal to the distributed LSH→CC chain — same bands, same verify
-    threshold, same min-struct tie-breaks."""
+    threshold, same min-struct tie-breaks. The fixture's similarity graph is
+    far under connected_components' own 100k-edge gate, so the distributed
+    chain resolves its components with the driver union-find; the
+    large/small-star rounds run only in tests/test_graph.py."""
     local = build_canon_map(gazetteer).orderBy("entity_id").collect()
     dist = (
         build_canon_map(gazetteer, local_threshold=0)
@@ -401,19 +466,43 @@ def test_minhash_signatures_equal_groupby_min(spark, family):
 
 
 def test_canon_local_path_runs_no_job(spark, gazetteer):
-    """With the gazetteer rows supplied, building the canon map and
-    collecting it submits no Spark job: the signature projection folds
-    into its LocalRelation on the driver."""
-    rows = gazetteer.select("surface_form", "entity_id", "entity_type").collect()
-    sc = spark.sparkContext
-    sc.setJobGroup("canon_local_no_job", "canon local path")
-    try:
-        got = build_canon_map(gazetteer, gaz_rows=rows).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert sc.statusTracker().getJobIdsForGroup("canon_local_no_job") == []
+    """Once the gazetteer's rows are read to the driver, building the canon
+    map and collecting it submits no Spark job: the signature projection
+    folds into its LocalRelation on the driver."""
+    from kbgen_spark.io import dictionary_rows
+
+    gaz = gazetteer.select("*")
+    assert dictionary_rows(gaz)
+    got: list = []
+    assert _job_count(spark, lambda: got.extend(build_canon_map(gaz).collect())) == 0
     assert len(got) > 0
+
+
+def test_canon_dense_buckets_take_the_distributed_path(spark, monkeypatch):
+    """Canon's driver loop is bounded by its candidate pairs, not its rows:
+    a small gazetteer whose surfaces share every band bucket takes the
+    distributed chain once Σ C(|bucket|, 2) is over CANON_LOCAL_MAX_PAIRS,
+    and gives the same map."""
+    from kbgen_spark import pipeline
+    from kbgen_spark.pipeline import LSH_BANDS
+
+    # Every "abab…" surface of 3+ chars has the bigram set {ab, ba}, so
+    # their signatures are equal and the 20 share all 16 buckets.
+    dense = [("ab" * 11)[:n] for n in range(3, 23)]
+    surfaces = dense + ["xyz", "qrst"]
+    gaz = spark.createDataFrame(
+        [(s, f"E{i:02d}", ("thing", "action")[i % 2]) for i, s in enumerate(surfaces)],
+        "surface_form string, entity_id string, entity_type string",
+    )
+    local = build_canon_map(gaz)
+    assert local._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+    want = sorted(map(tuple, local.collect()))
+    assert want[0] == ("E00", "E00", "thing") and len(want) == len(surfaces)
+
+    monkeypatch.setattr(pipeline, "CANON_LOCAL_MAX_PAIRS", LSH_BANDS * 190 - 1)
+    gated = build_canon_map(gaz)
+    assert gated._jdf.queryExecution().optimizedPlan().nodeName() != "LocalRelation"
+    assert sorted(map(tuple, gated.collect())) == want
 
 
 def test_driver_built_tables_are_local_relations(spark, gazetteer):
