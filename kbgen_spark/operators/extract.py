@@ -8,9 +8,9 @@ pure-python reference ``detect_mentions_py``):
 
 - **literal (pure Catalyst)** — for gazetteers with at most
   EXTRACT_LITERAL_MAX_SURFACES distinct surfaces, the whole gazetteer rides
-  into the plan as InSet literals and the greedy cursor fold runs
-  array-side per span: one narrow projection, no join, no shuffle
-  (extract_mentions_sql_literal).
+  into the plan as InSet literals; one candidate per position and the
+  greedy cursor fold over the phrase candidates run array-side per span:
+  narrow projections, no join, no shuffle (extract_mentions_sql_literal).
 - **sparse (pure Catalyst)** — above that cap: anchored broadcast candidate
   joins (candidate_mentions), the greedy fold over the sparse multi-token
   candidates only, and a coverage anti-join for the dense unigram matches
@@ -46,7 +46,6 @@ from pyspark.sql.functions import pandas_udf
 from kbgen_spark.io import dictionary_rows
 
 MENTION_ARRAY_T = "array<struct<mention:string,tok_start:int>>"
-MENTIONS_ACC_T = MENTION_ARRAY_T
 
 def detect_mentions_py(
     text: str, surface_forms: set[str], by_first: dict, max_phrase: int | None = None
@@ -390,55 +389,36 @@ def _candidate_mentions_literal(
     return uni.unionByName(multi)
 
 
-def _greedy_fold_expr(cands_col):
-    """The greedy cursor automaton as an ``F.aggregate`` expression over a
-    (pos asc, nl asc)-sorted array of (pos, nl, mention) candidate structs —
-    the LITERAL reference automaton (detect_mentions_py), inside codegen. A
-    candidate is emitted iff pos ≥ cursor, moving the cursor to pos + len (a
-    consumed position skips ALL its candidates; an emitted match consumes
-    exactly its own tokens). Shared by the sparse formulation's regrouped
-    fold (_greedy_fold_select) and the fully array-side literal extract."""
-    return F.aggregate(
-        cands_col,
-        F.expr(f"named_struct('cur', 0, 'acc', cast(array() as {MENTIONS_ACC_T}))"),
-        lambda st, c: F.when(
-            c["pos"] >= st["cur"],
-            F.struct(
-                (c["pos"] - c["nl"]).alias("cur"),
-                F.concat(
-                    st["acc"],
-                    F.array(
-                        F.struct(
-                            c["mention"].alias("mention"),
-                            c["pos"].alias("tok_start"),
-                        )
-                    ),
-                ).alias("acc"),
-            ),
-        ).otherwise(st),
-        lambda st: st["acc"],
+def _greedy_fold_sql(cands: str) -> str:
+    """The greedy cursor automaton as a SQL ``aggregate`` over ``cands``, a
+    (pos asc, nl asc)-sorted array of (pos, nl, mention) candidate structs
+    — the LITERAL reference automaton (detect_mentions_py), inside codegen.
+    A candidate fires iff pos ≥ cursor, moving the cursor to pos + len (a
+    consumed position skips ALL its candidates; a fired match consumes
+    exactly its own tokens). Returns the fired candidate structs. Shared by
+    the sparse formulation's regrouped fold (_greedy_fold_select) and the
+    array-side literal extract, both over multi-token candidates only."""
+    return (
+        f"aggregate({cands}, named_struct('cur', 0,"
+        f" 'acc', cast(array() as {_CAND_STRUCT_T})),"
+        " (st, x) -> IF(x.pos >= st.cur,"
+        " named_struct('cur', x.pos - x.nl, 'acc', concat(st.acc, array(x))), st),"
+        " st -> st.acc)"
     )
 
 
 def _greedy_fold_select(cands: DataFrame) -> DataFrame:
     """Replay the greedy longest-match scan over a candidate table
     ``(doc_id, span_idx, offset, pos, nl, mention)``: regroup per span
-    (sorted (pos asc, len desc) — nl = −len makes sort_array do it) and run
-    the cursor fold (_greedy_fold_expr)."""
+    (sorted (pos asc, len desc) — nl = −len makes sort_array do it), run
+    the cursor fold (_greedy_fold_sql) and explode the fired candidates,
+    in the same columns."""
     grouped = cands.groupBy("doc_id", "span_idx", "offset").agg(
         F.sort_array(F.collect_list(F.struct("pos", "nl", "mention"))).alias("c")
     )
-    sel = _greedy_fold_expr(F.col("c"))
-    return (
-        grouped.select("doc_id", "span_idx", "offset", F.explode(sel).alias("m"))
-        .select(
-            "doc_id",
-            "span_idx",
-            "offset",
-            F.col("m.mention").alias("mention"),
-            F.col("m.tok_start").alias("tok_start"),
-        )
-    )
+    return grouped.selectExpr(
+        "doc_id", "span_idx", "offset", f"explode({_greedy_fold_sql('c')}) AS m"
+    ).selectExpr("doc_id", "span_idx", "offset", "m.pos", "m.nl", "m.mention")
 
 
 # Whole-gazetteer literal extract: at most this many DISTINCT surface forms
@@ -457,14 +437,17 @@ def _dictionary_surfaces(gazetteer: DataFrame) -> list | None:
 def extract_mentions_sql_literal(docs: DataFrame, gazetteer: DataFrame) -> DataFrame:
     """Fully ARRAY-SIDE greedy mention detection for dictionary-small
     gazetteers — the whole gazetteer rides into the plan as literal InSet
-    probes, so extract is ONE narrow projection: tokenize → per-position
-    candidate structs (multi-token grams built only at positions whose
-    token anchors some L-token surface, longest L first) → the same greedy
-    cursor fold (_greedy_fold_expr) over the in-order candidate array →
-    explode. NO join, NO shuffle, NO regroup anywhere in the stage — the
-    plan is a single whole-stage-codegen span over the scan, which is the
-    one shape the 100 TB regime (and this VM's allocation-hostile 8-thread
-    profile) scales perfectly.
+    probes, so extract is narrow projections over the scan: tokenize → ONE
+    candidate per position (the longest surface starting there: multi-token
+    grams built only at positions whose token anchors some L-token surface,
+    longest L first, then the unigram, else NULL) → the sparse
+    formulation's rules 1–3 inside the array (extract_mentions_sql_sparse):
+    the cursor fold (_greedy_fold_sql) runs over the phrase candidates
+    only, and only on spans that have one; a candidate fires iff no fired
+    phrase covers it → explode. Only the longest candidate at a position
+    can fire (the cursor then skips its shorter ones), so nothing else is
+    built. NO join, NO shuffle, NO regroup anywhere in the stage — the plan
+    is one stage over the scan.
 
     Same size-adaptive family as the driver-local canon path: the surfaces
     come from the gazetteer's one driver read (io.dictionary_rows), and the
@@ -495,55 +478,52 @@ def extract_mentions_sql_literal(docs: DataFrame, gazetteer: DataFrame) -> DataF
 
     ts = explode_text_spans(docs).withColumn("_t", F.split("span_text", " "))
 
-    # The per-position candidate expression is generated as ONE
-    # server-parsed SQL string (round 6): the former per-node DataFrame-API
-    # construction (an isin per surface class, struct/when/slice per
-    # length) cost ~0.3 s of Py4J round trips EVERY time the plan is
-    # rebuilt — a per-rep tax in the bench loop and a per-batch tax in
-    # streaming. The string reproduces the identical expression tree:
-    # candidates at position i, longest L first (nl ascending), unigrams
-    # last — already the (pos asc, nl asc) order the fold consumes, so no
-    # sort is ever needed; gram strings are built only when the position's
-    # token anchors some L-token surface AND L tokens remain. Literals are
-    # backslash-escaped; bit-equality to the sparse/UDF paths is test-pinned
-    # and the kg_mentions_literal oracle replays the output cross-engine.
+    # The expressions are server-parsed SQL strings (round 6): building the
+    # same tree node by node through the DataFrame API cost ~0.3 s of Py4J
+    # round trips EVERY time the plan is rebuilt — a per-rep tax in the
+    # bench loop and a per-batch tax in streaming. Each step is its own
+    # projection whose column the next step reads more than once, so the
+    # optimizer keeps them apart and the candidate array and the fold run
+    # once per span. Literals are backslash-escaped; bit-equality to the
+    # sparse/UDF paths is test-pinned and the kg_mentions_literal oracle
+    # replays the output cross-engine.
     def _sq(s: str) -> str:
         return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
     def _inlist(vals) -> str:
         return "(" + ", ".join(_sq(v) for v in vals) + ")"
 
-    entries = []
+    whens = []
     for L in sorted(multis, reverse=True):
         gram = f"array_join(slice(_t, i + 1, {L}), ' ')"
-        entries.append(
-            f"case when x in {_inlist(firsts[L])}"
-            f" and (size(_t) - i) >= {L}"
-            f" and {gram} in {_inlist(multis[L])}"
-            f" then named_struct('pos', cast(i as int),"
-            f" 'nl', cast({-L} as int), 'mention', {gram}) end"
+        whens.append(
+            f" WHEN x IN {_inlist(firsts[L])} AND size(_t) - i >= {L}"
+            f" AND {gram} IN {_inlist(multis[L])}"
+            f" THEN named_struct('pos', i, 'nl', {-L}, 'mention', {gram})"
         )
     if uni:
-        entries.append(
-            f"case when x in {_inlist(uni)}"
-            " then named_struct('pos', cast(i as int),"
-            " 'nl', cast(-1 as int), 'mention', x) end"
+        whens.append(
+            f" WHEN x IN {_inlist(uni)}"
+            " THEN named_struct('pos', i, 'nl', -1, 'mention', x)"
         )
-    cand_sql = (
-        "flatten(transform(_t, (x, i) -> filter(array("
-        + ", ".join(entries)
-        + "), e -> e is not null)))"
-    )
-    sel = _greedy_fold_expr(F.expr(cand_sql))
+    phrases = "filter(c, e -> e.nl < -1)"
+    covered = "exists(f, g -> g.pos < e.pos AND e.pos < g.pos - g.nl)"
     return (
-        ts.select("doc_id", "span_idx", "offset", F.explode(sel).alias("m"))
-        .select(
-            "doc_id",
-            "span_idx",
-            "offset",
-            F.col("m.mention").alias("mention"),
-            F.col("m.tok_start").alias("tok_start"),
+        ts.selectExpr(
+            "doc_id", "span_idx", "offset",
+            f"transform(_t, (x, i) -> CASE{''.join(whens)} END) AS c",
         )
+        .selectExpr(
+            "doc_id", "span_idx", "offset", "c",
+            f"IF(exists(c, e -> e.nl < -1), {_greedy_fold_sql(phrases)},"
+            f" cast(array() as {_CAND_STRUCT_T})) AS f",
+        )
+        .selectExpr(
+            "doc_id", "span_idx", "offset",
+            "explode(IF(size(f) = 0, filter(c, e -> e IS NOT NULL),"
+            f" filter(c, e -> e IS NOT NULL AND NOT {covered}))) AS m",
+        )
+        .selectExpr("doc_id", "span_idx", "offset", "m.mention", "m.pos AS tok_start")
     )
 
 
@@ -596,23 +576,15 @@ def extract_mentions_sql_sparse(
         )
     )
     fired = _greedy_fold_select(longest)
-    covered = fired.select(
-        "doc_id",
-        "span_idx",
-        "offset",
-        F.explode(
-            F.sequence(
-                F.col("tok_start"),
-                F.col("tok_start") + F.size(F.split("mention", " ")) - 1,
-            )
-        ).alias("pos"),
+    covered = fired.selectExpr(
+        "doc_id", "span_idx", "offset", "explode(sequence(pos, pos - nl - 1)) AS pos"
     )
     uni_fired = uni.join(
         covered, ["doc_id", "span_idx", "offset", "pos"], "left_anti"
-    ).select(
-        "doc_id", "span_idx", "offset", "mention", F.col("pos").alias("tok_start")
     )
-    return fired.unionByName(uni_fired)
+    return fired.unionByName(uni_fired).selectExpr(
+        "doc_id", "span_idx", "offset", "mention", "pos AS tok_start"
+    )
 
 
 def _resolve_extract(gazetteer: DataFrame):

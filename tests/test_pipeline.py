@@ -75,7 +75,7 @@ def _random_streams(seed):
 
 
 def _extract_input(request, spark, name):
-    """The four extract inputs:
+    """The five extract inputs:
 
     - fixture: the fixture docs and k=5 gazetteer (nested prefixes);
     - ktoken: 3-5-token surfaces with nested prefixes that force real
@@ -84,7 +84,11 @@ def _extract_input(request, spark, name):
       surfaces up to 3 tokens (dense unigrams + overlapping multi islands);
     - islands: every adjacent pair a bigram surface, so each span is one
       maximal island of bigram candidates with unigrams competing at every
-      blocked position."""
+      blocked position;
+    - adversarial: nested surfaces; a phrase anchored inside a fired
+      phrase (blocked) followed by a unigram that fires; phrases ending
+      exactly at the span end; phrases longer than their span; spans with
+      phrase candidates but no unigram; one-token and unmatched spans."""
     if name == "fixture":
         return request.getfixturevalue("docs"), request.getfixturevalue("gazetteer")
     if name == "ktoken":
@@ -108,6 +112,21 @@ def _extract_input(request, spark, name):
             "",
             "university",
             "of university california of",
+        ]
+        return _one_span_input(spark, surfaces, texts)
+    if name == "adversarial":
+        surfaces = {"a b", "a b c", "b c d", "c", "d", "x y", "y z"}
+        texts = [
+            "a b c d",
+            "c a b",
+            "a b c",
+            "b c",
+            "x y z",
+            "x y x y",
+            "a",
+            "c",
+            "zz top",
+            "",
         ]
         return _one_span_input(spark, surfaces, texts)
     if name == "dense_unigram":
@@ -140,7 +159,9 @@ _FORMULATIONS = {
 }
 
 
-@pytest.mark.parametrize("inp", ["fixture", "ktoken", "dense_unigram", "islands"])
+@pytest.mark.parametrize(
+    "inp", ["fixture", "ktoken", "dense_unigram", "islands", "adversarial"]
+)
 @pytest.mark.parametrize("formulation", sorted(_FORMULATIONS))
 def test_extract_matches_python_reference(request, spark, formulation, inp):
     """Each extract formulation emits exactly the rows of the pure-python
@@ -707,6 +728,97 @@ def test_link_drifting_gazetteer_matches_golden(spark):
 
     plan = link_verdicts(gaz)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan
+
+
+def _canon_verdicts_reference(gaz, canon) -> list:
+    """link_verdicts left-joined with the canon map: the fused verdict's
+    distributed formulation, as sorted rows."""
+    from kbgen_spark.operators.link import link_verdicts
+
+    ref = link_verdicts(gaz).join(canon, "entity_id", "left").selectExpr(
+        "mention",
+        "coalesce(canon_id, entity_id)",
+        "coalesce(canon_type, entity_type)",
+    )
+    return sorted(map(tuple, ref.collect()))
+
+
+def test_canon_verdicts_equal_link_verdicts_with_canon_map(
+    spark, gazetteer, monkeypatch
+):
+    """The driver-built fused verdict equals link_verdicts left-joined with
+    the canon map on the fixture gazetteer, and so does the fallback taken
+    when the gazetteer is over the driver-read cap."""
+    from kbgen_spark import io
+    from kbgen_spark.operators.link import canon_verdicts
+
+    canon = build_canon_map(gazetteer)
+    want = _canon_verdicts_reference(gazetteer, canon)
+    assert len(want) > 0
+    local = canon_verdicts(gazetteer, canon)
+    assert local._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+    assert sorted(map(tuple, local.collect())) == want
+
+    monkeypatch.setattr(io, "DICTIONARY_MAX_ROWS", 0)
+    fallback = canon_verdicts(gazetteer.select("*"), canon)
+    assert "Window" in fallback._jdf.queryExecution().executedPlan().toString()
+    assert sorted(map(tuple, fallback.collect())) == want
+
+
+def test_canon_verdicts_edge_surfaces(spark):
+    """The driver ranking and normalization match the window's on tied
+    priors, a surface whose norm is another surface ('Scan!'), surfaces
+    whose norm is no surface ('Node?', 'Über'), a non-ASCII surface whose
+    norm is a surface ('café' → 'caf'), NULL priors (sorted last) and a
+    NaN prior (sorted above every number)."""
+    from kbgen_spark.operators.link import canon_verdicts
+
+    gaz = spark.createDataFrame(
+        [
+            ("scan", "E2", "thing", 0.8),
+            ("scan", "E1", "action", 0.8),
+            ("Scan!", "E9", "system", 0.99),
+            ("Node?", "E5", "thing", 0.7),
+            ("Über", "E8", "thing", 0.3),
+            ("café", "E6", "thing", 0.9),
+            ("caf", "E7", "action", 0.5),
+            ("edge", "E4", "action", None),
+            ("edge", "E3", "thing", 0.1),
+            ("lone", "E10", "thing", None),
+            ("lone", "E12", "action", float("nan")),
+            ("lone", "E11", "thing", 0.2),
+        ],
+        "surface_form string, entity_id string, entity_type string, prior double",
+    )
+    canon = spark.createDataFrame(
+        [("E1", "E3", "thing"), ("E7", "E6", "thing")],
+        "entity_id string, canon_id string, canon_type string",
+    )
+    want = _canon_verdicts_reference(gaz, canon)
+    assert want == [
+        ("Scan!", "E3", "thing"),
+        ("caf", "E6", "thing"),
+        ("café", "E6", "thing"),
+        ("edge", "E3", "thing"),
+        ("lone", "E12", "action"),
+        ("scan", "E3", "thing"),
+    ]
+    assert sorted(map(tuple, canon_verdicts(gaz, canon).collect())) == want
+
+
+def test_canon_verdicts_run_no_job(spark, gazetteer):
+    """Once the gazetteer's rows are read to the driver and the canon map is
+    a LocalRelation, building the fused verdict and collecting it submits
+    no Spark job."""
+    from kbgen_spark.io import dictionary_rows
+    from kbgen_spark.operators.link import canon_verdicts
+
+    gaz = gazetteer.select("*")
+    assert dictionary_rows(gaz)
+    canon = build_canon_map(gaz)
+    got: list = []
+    assert _job_count(spark, lambda: got.extend(canon_verdicts(gaz, canon).collect())) == 0
+    assert len(got) > 0
 
 
 def test_pipeline_max_ents_per_doc_guard(spark, docs, gazetteer, patterns):
